@@ -1,9 +1,9 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry``: flagship end-to-end run — encode the sf0.001 documents table as a
-source-code corpus through the full engine (salted staging → per-bucket
-stripe/encode with checkpoint markers → decode → sha256 verify) and return a
-per-language summary with compression ratios.
+source-code corpus through the full engine (salted shuffle → per-bucket
+stripe/encode inside the shuffle task with checkpoint markers → decode →
+sha256 verify) and return a per-language summary with compression ratios.
 
 ``queries`` / ``oracle_sql``: one entry per implemented operator
 (SURVEY.md §2 mapping + training-data ops); see colonnade_spark/queries.py.

@@ -112,21 +112,11 @@ def encode_worker(cores: int, corpus_dir: str, out_json: str,
         shutil.rmtree(wh, ignore_errors=True)
         probes.append(_throttle_probe_ms())
         t0 = time.time()
-        # fused single-pass path by default (round 5): encode runs INSIDE
-        # the shuffle task, no staged parquet round-trip.  It was ~25%
-        # slower in round 4, but the lz4 shuffle codec + probe gating +
-        # C table build flipped it: local[8] 8.2 s fused vs 12.0 s staged,
-        # [2->8] 0.92 vs 0.73 (the staged write's single-disk floor was
-        # the non-scaling term).  Also the 100-TB-correct shape — staged
-        # would round-trip the corpus through shared storage.
-        # BENCH_STAGED=1 measures the two-phase staged path (byte-identical
-        # blocks; kept for durable-shuffle resume workloads).
         # salt sizing from a seeded 5% sample: skew stats don't need a full
         # corpus scan (engine.assign_buckets docstring)
         manifest = engine.encode_table(
             spark, df, corpus_plan(), wh, n_buckets=n_buckets,
             stripe_bytes=4 << 20, mode="overwrite", input_token=f"bench{N_FILES}",
-            fused=os.environ.get("BENCH_STAGED") != "1",
             salt_sample_fraction=0.05)
         attempt_wall = time.time() - t0
         walls.append(round(attempt_wall, 3))

@@ -3,31 +3,27 @@
 Pipeline (SURVEY.md §3.2-3.3 generalized to Spark):
 
 encode:  plan.project(df)  → salt/bucket assignment (skew pre-pass)
-         → two interchangeable execution paths (byte-identical blocks):
-           FUSED (encode_table(fused=True)): one pass —
-             repartition(n_buckets, bucket) + sortWithinPartitions(bucket,
-             keys) + mapInArrow per-bucket encode inside the shuffle task;
-             the corpus is materialized once (shuffle files), not twice.
-           STAGED: repartition + sort written parquet-partitioned by bucket
-             [Catalyst-planned], then per-bucket encode tasks re-read it —
-             the shuffle itself becomes durable, so resume skips even the
-             re-shuffle (at the cost of a full extra round-trip through
-             shared storage — at 100 TB that is the dominant difference).
-         → per-bucket encode (both paths): stream record batches, cut
-           size-capped row-aligned stripes, encode each column to a framed
-           block, write blocks+lineage, drop a checkpoint marker
+         → one pass: repartition(n_buckets, __bucket) +
+           sortWithinPartitions(__bucket, keys) + mapInArrow, so each
+           bucket is encoded INSIDE the shuffle task and the corpus is
+           materialized once (the shuffle files)
+         → per-bucket encode: stream record batches, cut size-capped
+           row-aligned stripes, encode each column to a framed block,
+           write blocks+lineage, append a checkpoint marker line
            [imperative by design: per-partition checkpoint/resume semantics
            Spark's job-atomic committer cannot express — north_rule
            "resumable from checkpoint"]
 
-decode:  read blocks parquet → groupBy(bucket, stripe).applyInPandas
-         → reassembled rows with the planned schema
+decode:  read blocks parquet → mapInArrow reassembles each stripe as its
+         (file-contiguous) blocks stream past, no shuffle → rows with the
+         planned schema
 
 verify:  decoded ⋈ source on key_cols (sort-merge; both sides large),
          sha256 equality per content column (input_hint invariant)
 
-Determinism: staging order is total (unique keys), codecs are deterministic,
-so re-running a bucket yields byte-identical blocks — markers are safe.
+Determinism: the within-bucket row order is total (unique keys), stripe cuts
+depend only on that row sequence, and codecs are deterministic, so re-running
+a bucket yields byte-identical blocks — markers are safe.
 Local filesystem warehouse here; on a cluster, point ``warehouse`` at shared
 storage (pyarrow reads s3:///hdfs:// via fsspec) — layout is unchanged.
 """
@@ -122,12 +118,12 @@ def assign_buckets(df, plan: EncodePlan, n_buckets: int,
     re-scans every content byte just to find the few giant values, a whole
     extra pass over the corpus (at 100 TB, the skew statistics job must
     sample — this is what AQE's runtime skew stats do too).  The seed is
-    fixed, so the salt map — and with it the bucket layout, the staging
-    fingerprint, and resume — stays deterministic for the same input.
+    fixed, so the salt map — and with it the bucket layout and resume —
+    stays deterministic for the same input.
     Giant values are exactly the ones a uniform sample cannot miss (they
     hold many rows / most bytes); a value whose size is underestimated
-    still lands within ~1/fraction of its true salt fan-out, which LPT
-    scheduling and the stripe cap absorb.
+    still lands within ~1/fraction of its true salt fan-out, which the
+    stripe cap absorbs.
     """
     from pyspark.sql import functions as F
 
@@ -146,7 +142,7 @@ def assign_buckets(df, plan: EncodePlan, n_buckets: int,
     # function of the input partitioning (split layout varies with file
     # sizes, maxPartitionBytes, and defaultParallelism), so the same data
     # on a different cluster size would yield a different salt map — and
-    # with it a different bucket layout, which a fused-path resume must
+    # with it a different bucket layout, which a resume must
     # never see (completed buckets are anti-joined out by id; a layout
     # shift would silently lose/duplicate rows).  A hash filter over the
     # row key is a pure function of row CONTENT: same input → same sample
@@ -203,18 +199,6 @@ def _row_sizes(batch: pa.RecordBatch) -> np.ndarray:
     return sizes
 
 
-def _stripe_iter(pf_paths, columns, stripe_bytes):
-    """Parquet wrapper over :func:`_stripe_iter_batches` (the staged path:
-    one bucket = one staged parquet dir)."""
-
-    def batches():
-        for path in pf_paths:
-            pf = pq.ParquetFile(path)
-            yield from pf.iter_batches(batch_size=8192, columns=columns)
-
-    yield from _stripe_iter_batches(batches(), stripe_bytes)
-
-
 def _stripe_iter_batches(batch_iter, stripe_bytes):
     """Yield row-aligned arrow Tables, each <= stripe_bytes unless a SINGLE
     row alone exceeds the cap (that row is then isolated into its own
@@ -226,9 +210,9 @@ def _stripe_iter_batches(batch_iter, stripe_bytes):
     fresh stripe, where an oversized row never drags a neighbor with it.
 
     Cut positions depend ONLY on the row sequence and per-row byte sizes —
-    never on how the input is batched — so the staged (parquet, 8192-row
-    read batches) and fused (shuffle, arrow stream batches) paths produce
-    byte-identical stripes for the same bucket content."""
+    never on how the input is batched — so a bucket's stripes, and with
+    them its block bytes, are a pure function of its row sequence, however
+    the shuffle happens to batch it."""
     buf, buf_bytes = [], 0
     for batch in batch_iter:
         if batch.num_rows == 0:
@@ -275,9 +259,7 @@ def _iter_bucket_runs(batches, cols):
     """Split a stream of arrow batches sorted by ``__bucket`` into
     ``(bucket_id, sub_batch)`` pairs at bucket transitions.  A bucket never
     splits across shuffle partitions, so grouping the pairs with
-    ``itertools.groupby`` reassembles each bucket's full row sequence.
-    Shared by the fused (shuffle arrow stream) and staged-v2 (per-partition
-    parquet file) readers so their run semantics cannot drift apart."""
+    ``itertools.groupby`` reassembles each bucket's full row sequence."""
     for b in batches:
         if b.num_rows == 0:
             continue
@@ -318,104 +300,72 @@ class _MarkerShard:
         self._f.flush()
 
 
-def list_markers(warehouse: str) -> list:
-    """Every marker currently published (shard lines + legacy per-bucket
-    files), torn lines skipped, one dict per bucket (ops/test hook — the
-    engine paths use the distributed :func:`_scan_markers` instead)."""
+def _marker_paths(warehouse: str) -> list:
+    """Every marker file: task shards plus legacy per-bucket files (written
+    by older engine versions, still honored on resume)."""
     mdir = os.path.join(warehouse, "markers")
-    out: dict = {}
-    for p in sorted(glob.glob(os.path.join(mdir, "shard_*.jsonl"))):
-        for line in open(p):
+    return (sorted(glob.glob(os.path.join(mdir, "shard_*.jsonl")))
+            + sorted(glob.glob(os.path.join(mdir, "bucket_*.json"))))
+
+
+def _read_markers(path: str) -> list:
+    """The markers in one marker file.  A shard holds one marker per line;
+    a torn tail line (task killed mid-append) fails to parse and is skipped
+    — that bucket simply redoes.  A legacy per-bucket file holds one whole
+    marker."""
+    with open(path) as f:
+        if not path.endswith(".jsonl"):
+            return [json.load(f)]
+        out = []
+        for line in f:
             try:
-                m = json.loads(line)
+                out.append(json.loads(line))
             except ValueError:
                 continue
+        return out
+
+
+def _compact_markers(warehouse: str, keep) -> None:
+    """Drop every marker for which ``keep(marker)`` is false.  Each shard is
+    rewritten to its kept lines (atomic tmp + replace) or removed when none
+    remain; a legacy per-bucket file is removed unless kept.  Torn lines
+    are dropped on the way."""
+    for p in _marker_paths(warehouse):
+        kept = [m for m in _read_markers(p) if keep(m)]
+        if not kept:
+            os.remove(p)
+        elif p.endswith(".jsonl"):
+            tmp = f"{p}.{os.getpid()}.tmp"
+            with open(tmp, "w") as f:
+                f.writelines(json.dumps(m) + "\n" for m in kept)
+            os.replace(tmp, p)
+
+
+def list_markers(warehouse: str) -> list:
+    """Every marker currently published, torn lines skipped, one dict per
+    bucket (ops/test hook — the engine uses the distributed
+    :func:`_scan_markers` instead)."""
+    out: dict = {}
+    for p in _marker_paths(warehouse):
+        for m in _read_markers(p):
             out.setdefault(int(m["bucket"]), m)
-    for p in sorted(glob.glob(os.path.join(mdir, "bucket_*.json"))):
-        m = json.load(open(p))
-        out.setdefault(int(m["bucket"]), m)
     return [out[b] for b in sorted(out)]
 
 
 def invalidate_markers(warehouse: str, buckets) -> None:
     """Drop specific buckets' markers (ops/test hook — e.g. simulate lost
-    output, or force selected buckets to re-encode on the next resume):
-    legacy per-bucket files are unlinked; shard files are compacted in
-    place without those lines (atomic tmp+replace per shard)."""
+    output, or force selected buckets to re-encode on the next resume)."""
     drop = set(int(b) for b in buckets)
-    mdir = os.path.join(warehouse, "markers")
-    for p in glob.glob(os.path.join(mdir, "bucket_*.json")):
-        if int(os.path.basename(p)[len("bucket_"):-len(".json")]) in drop:
-            os.remove(p)
-    for p in glob.glob(os.path.join(mdir, "shard_*.jsonl")):
-        keep = []
-        for line in open(p):
-            try:
-                m = json.loads(line)
-            except ValueError:
-                continue
-            if int(m.get("bucket", -1)) not in drop:
-                keep.append(line if line.endswith("\n") else line + "\n")
-        if keep:
-            tmp = f"{p}.{os.getpid()}.tmp"
-            with open(tmp, "w") as f:
-                f.writelines(keep)
-            os.replace(tmp, p)
-        else:
-            os.remove(p)
-
-
-def _encode_staged_file(path: str, warehouse: str, plan_json: str,
-                        stripe_bytes: int, fingerprint: str = "",
-                        skip: frozenset = frozenset()) -> tuple:
-    """One task of the staged-v2 path: encode every bucket run inside ONE
-    staged shuffle-partition parquet file (rows sorted by ``__bucket``
-    first, so each bucket is one contiguous run; several bucket ids can
-    share a file — pmod(hash(id), n) is not the identity — but an id never
-    splits across files).  ``skip`` holds already-checkpointed bucket ids
-    (resume): their row groups are pruned via parquet ``__bucket`` min/max
-    stats before any data bytes are read.  Returns the folded stats tuple
-    for the buckets encoded here."""
-    import itertools
-
-    _pin_arrow_threads()
-    plan = EncodePlan.from_json(plan_json)
-    cols = list(plan.column_names)
-    pf = pq.ParquetFile(path)
-    col_idx = {c.name: i for i, c in enumerate(pf.schema_arrow)}["__bucket"]
-    keep_rgs = []
-    for rg in range(pf.metadata.num_row_groups):
-        st = pf.metadata.row_group(rg).column(col_idx).statistics
-        if st is None or st.min is None or st.max is None \
-                or (st.max - st.min) > 100_000:
-            keep_rgs.append(rg)  # no/implausible stats → cannot prune
-        elif any(b not in skip for b in range(int(st.min), int(st.max) + 1)):
-            keep_rgs.append(rg)
-    stats = _STATS_ZERO
-    if not keep_rgs:
-        return stats
-    batches = pf.iter_batches(batch_size=8192, columns=["__bucket"] + cols,
-                              row_groups=keep_rgs)
-    sink = _MarkerShard(warehouse)
-    for bucket, grp in itertools.groupby(_iter_bucket_runs(batches, cols),
-                                         key=lambda t: t[0]):
-        if bucket in skip:
-            continue
-        stripes = _stripe_iter_batches((s for _, s in grp), stripe_bytes)
-        m = _encode_bucket_core(bucket, stripes, warehouse, plan,
-                                stripe_bytes, fingerprint, marker_sink=sink)
-        stats = _stats_add(stats, _marker_stats(m))
-    return stats
+    _compact_markers(warehouse,
+                     lambda m: int(m.get("bucket", -1)) not in drop)
 
 
 def _encode_bucket_core(bucket: int, stripes, warehouse: str,
                         plan: EncodePlan, stripe_bytes: int,
-                        fingerprint: str = "", marker_sink=None) -> dict:
-    """Encode an iterator of row-aligned stripe Tables for one bucket and
-    atomically publish blocks + lineage + checkpoint marker.  Shared by the
-    staged (parquet re-read) and fused (in-shuffle mapInArrow) paths —
-    stripe cutting is batching-independent, so both paths emit byte-
-    identical blocks for the same bucket content."""
+                        fingerprint: str, marker_sink) -> dict:
+    """Encode an iterator of row-aligned stripe Tables for one bucket,
+    atomically publish blocks + lineage, then hand the checkpoint marker to
+    ``marker_sink`` (a :class:`_MarkerShard`)."""
     wall0 = time.perf_counter()
     cols = plan.column_names
     bdir = os.path.join(warehouse, "blocks", f"bucket={bucket}")
@@ -535,27 +485,16 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
     ltmp = os.path.join(ldir, f"_tmp_{bucket}_{suffix}.parquet")
     pq.write_table(lineage_tbl, ltmp)
     os.replace(ltmp, os.path.join(ldir, f"bucket_{bucket}.parquet"))
-    # the marker carries the FULL staging fingerprint (plan + input token +
-    # bucket count), not just the plan hash: a resume against re-staged input
-    # or a different bucketing must not trust stale markers
+    # the marker carries the FULL fingerprint (plan + input token + bucket
+    # count + salt params), not just the plan hash: a resume against
+    # changed input or a different bucketing must not trust stale markers.
+    # One marker LINE appended to the task's shard file — O(n_partitions)
+    # marker objects; see _MarkerShard for the durability argument
     marker = {"bucket": bucket, "plan_hash": plan.plan_hash(),
               "fingerprint": fingerprint, "stripes": stripe,
               "rows": n_rows_total, "bytes_in": total_in, "bytes_out": total_out,
               "wall_s": round(time.perf_counter() - wall0, 3)}
-    if marker_sink is not None:
-        # shard sink (the engine paths): one marker LINE appended to the
-        # task's shard file — O(n_partitions) marker objects (round-5
-        # verdict item 4); see _MarkerShard for the durability argument
-        marker_sink(marker)
-    else:
-        # legacy one-file-per-bucket publish for direct callers
-        mtmp = os.path.join(warehouse, "markers",
-                            f"_tmp_{bucket}_{suffix}.json")
-        os.makedirs(os.path.dirname(mtmp), exist_ok=True)
-        with open(mtmp, "w") as f:
-            json.dump(marker, f)
-        os.replace(mtmp, os.path.join(warehouse, "markers",
-                                      f"bucket_{bucket}.json"))
+    marker_sink(marker)
     return marker
 
 
@@ -579,27 +518,9 @@ def _scan_markers(sc, warehouse: str, fingerprint: str) -> tuple:
     buckets), keep only full-fingerprint matches (plan AND input AND bucket
     count AND salt params — stale markers must never validate against a
     re-derived layout), and fold their stats.  Returns (done bucket-id set,
-    folded stats tuple).  Shared by the staged and fused paths so the
-    resume-validation rules cannot drift apart."""
-
-    def _read_markers(pth):
-        # shard files hold one marker per line; a torn tail line (task
-        # killed mid-append) fails to parse and is skipped — that bucket
-        # simply redoes.  Legacy per-bucket files hold one whole marker.
-        out = []
-        with open(pth) as f:
-            if pth.endswith(".jsonl"):
-                for line in f:
-                    try:
-                        out.append(json.loads(line))
-                    except ValueError:
-                        continue
-            else:
-                out.append(json.load(f))
-        return out
-
-    mpaths = (glob.glob(os.path.join(warehouse, "markers", "shard_*.jsonl"))
-              + glob.glob(os.path.join(warehouse, "markers", "bucket_*.json")))
+    folded stats tuple).  Executors parse the files with
+    :func:`_read_markers`, the reader the driver-side hooks use too."""
+    mpaths = _marker_paths(warehouse)
     done, stats = set(), _STATS_ZERO
     if not mpaths:
         return done, stats
@@ -622,35 +543,44 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
                  n_buckets: int = 32, stripe_bytes: int = 4 << 20,
                  target_salt_bytes: int = 64 << 20,
                  mode: str = "error", input_token: str = "",
-                 fused: bool = False,
+                 fused: bool = True,
                  salt_sample_fraction: float = 1.0) -> dict:
     """Run the encode job; returns the manifest dict.
 
     mode: "error" (refuse existing warehouse), "overwrite", or "resume"
-    (skip staged input and completed buckets — the checkpoint path).
+    (skip completed buckets — the checkpoint path).
 
-    fused=True runs the single-pass path: the per-bucket encode happens
-    INSIDE the shuffle task (``repartition(__bucket)`` →
-    ``sortWithinPartitions`` → ``mapInArrow``), so the corpus is
-    materialized once (shuffle files) instead of twice (shuffle + staged
-    parquet) — at 100 TB the staged write is a full extra round-trip
-    through shared storage.  Checkpoint granularity is unchanged (per-
-    bucket markers, byte-identical blocks); a resumed fused run re-shuffles
-    only the rows of buckets without a valid marker (completed buckets are
-    anti-joined out BEFORE the shuffle).  The staged path remains for
-    workloads that want the shuffle itself durable (resume skips even the
-    re-shuffle at the cost of the extra materialization).
+    One pass: the per-bucket encode happens INSIDE the shuffle task
+    (``repartition(__bucket)`` → ``sortWithinPartitions`` →
+    ``mapInArrow``), so the corpus is materialized once (the shuffle
+    files).  One hash partition can hold SEVERAL bucket ids (pmod(hash(b),
+    n) is not the identity), but a bucket id never splits across
+    partitions — the task iterator groups contiguous ``__bucket`` runs (the
+    partition is sorted by ``__bucket`` first) and feeds each run's batches
+    straight into the per-bucket stripe encoder.  Driver state stays
+    O(n_buckets ints); per-bucket stats come back as the mapInArrow output
+    rows and are folded by a Spark aggregation, not a collect.
 
-    Fused is the recommended default at any scale (and the bench default
-    since round 5): after the lz4 shuffle codec + selection-probe gating +
-    C table build, it wins locally too (local[8] 8.2 s vs 12.0 s staged,
-    [2→8] scaling 0.92 vs 0.73 — the staged write's single-disk floor was
-    the non-scaling term; BASELINE.md round-5).
+    Checkpoints are per bucket (marker lines, byte-identical blocks).  A
+    resume keeps the buckets whose marker matches the full fingerprint,
+    drops every other marker, block dir and lineage file, and re-shuffles
+    only the rows of the remaining buckets (completed buckets are
+    anti-joined out BEFORE the shuffle).  The shuffle itself is not
+    checkpointed: keeping shuffle output across executor loss at scale is
+    Spark's job (external shuffle service or executor decommissioning), not
+    the engine's.
+
+    ``fused`` only accepts ``True`` (the former two-phase staged path was
+    removed; ``fused=False`` raises rather than run something else).
     """
     import shutil
 
     from pyspark.sql import functions as F
 
+    if not fused:
+        raise ValueError("encode_table(fused=False): the staged encode path "
+                         "was removed; the single-pass encode is the only "
+                         "path (drop the argument)")
     manifest_path = os.path.join(warehouse, "manifest.json")
     if os.path.exists(warehouse) and os.listdir(warehouse):
         if mode == "error":
@@ -660,196 +590,28 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
     os.makedirs(warehouse, exist_ok=True)
 
     # the fingerprint must pin EVERYTHING the bucket layout depends on:
-    # salt parameters changed between runs would re-derive a different
-    # layout at resume, and the fused path (which recomputes assignment
-    # instead of reading it back from staged parquet) would then trust
-    # markers from the old layout — silent row loss/duplication
+    # the layout is re-derived at resume, so e.g. salt parameters changed
+    # between runs would otherwise trust markers from the old layout —
+    # silent row loss/duplication
     fingerprint = json.dumps(
         {"plan": plan.plan_hash(), "n_buckets": n_buckets,
          "input": input_token,
          "salt": [int(target_salt_bytes), round(float(salt_sample_fraction), 6)]},
         sort_keys=True)
-    staged_dir = os.path.join(warehouse, "staged")
-    staged_marker = os.path.join(warehouse, "_STAGED.json")
-
     projected = plan.project(df)
     schema_ddl = projected.select(*plan.column_names).schema.simpleString()
 
-    if fused:
-        return _encode_fused(spark, projected, plan, warehouse,
-                             n_buckets=n_buckets, stripe_bytes=stripe_bytes,
-                             target_salt_bytes=target_salt_bytes, mode=mode,
-                             fingerprint=fingerprint, schema_ddl=schema_ddl,
-                             manifest_path=manifest_path,
-                             salt_sample_fraction=salt_sample_fraction)
-
-    t_stage0 = time.time()
-    need_stage = True
-    if mode == "resume" and os.path.exists(staged_marker):
-        with open(staged_marker) as f:
-            sm = json.load(f)
-        # layout 2 = flat per-shuffle-partition files; an older dynamic-
-        # partitionBy staging (no layout tag) must be rebuilt, not reused
-        need_stage = (sm.get("fingerprint") != fingerprint
-                      or sm.get("layout") != 2)
-    if need_stage:
-        # staging (re)built → any existing markers/blocks describe OLD
-        # staged data; invalidate them so resume cannot trust stale state
-        for sub in ("markers", "blocks", "lineage"):
-            shutil.rmtree(os.path.join(warehouse, sub), ignore_errors=True)
-        bucketed = assign_buckets(projected, plan, n_buckets, target_salt_bytes,
-                                  salt_sample_fraction)
-        order = plan.stage_order or plan.column_names
-        # zstd staged files: ~45% smaller than snappy on text and ~1.5x
-        # faster wall for the staging write on this disk; decompression in
-        # the per-bucket readers is cheap (~1 GB/s/core).  Level stays the
-        # parquet default (3): zstd-1 measured 23% faster on CPU-bound
-        # small inputs but a wash-to-loss at bench scale, where staging is
-        # bound by the single shared disk and +12% scratch bytes cost more
-        # than the cheaper compressor saves.
-        # staged-v2 layout: a PLAIN parquet write — one file per shuffle
-        # partition with __bucket kept as a leading sort column — instead
-        # of dynamic partitionBy.  The dynamic writer costs a per-row
-        # partition dispatch, one directory + file handle per bucket
-        # (O(n_buckets) filesystem metadata, ~4M dirs at scale), and a
-        # hidden sort(partition_col) whenever the input order doesn't lead
-        # with it.  Here each task streams straight into a single file;
-        # the sort still leads with __bucket so each bucket is one
-        # contiguous run that the per-file encode task re-splits (same
-        # run-grouping as the fused path), and the within-bucket row order
-        # — hence every stripe cut and block byte — is unchanged.
-        # maxRecordsPerFile pinned to 0 (unlimited): the staged-v2 resume
-        # contract assumes exactly ONE file per shuffle partition so a
-        # bucket never splits across staged files; a user-level
-        # spark.sql.files.maxRecordsPerFile > 0 would split a task's
-        # output and two _encode_staged_file tasks would each encode a
-        # partial bucket and race on its marker (ADVICE round 5)
-        (bucketed.repartition(n_buckets, F.col("__bucket"))
-                 .sortWithinPartitions("__bucket", *order)
-                 .write.mode("overwrite")
-                 .option("compression", "zstd")
-                 .option("maxRecordsPerFile", 0)
-                 .parquet(staged_dir))
-        with open(staged_marker, "w") as f:
-            json.dump({"fingerprint": fingerprint, "layout": 2}, f)
-
-    sc = spark.sparkContext
-
-    def _par(items):
-        return sc.parallelize(items, max(1, min(len(items), 4 * int(
-            sc.defaultParallelism))))
-
-    # the encode unit is one staged shuffle-partition FILE (staged-v2):
-    # the driver does ONE flat directory listing (n_partitions names, not
-    # n_buckets dynamic-partition dirs); per-file sizes for LPT scheduling
-    # come back from a distributed stat, only (name, size) pairs cross.
-    done: set = set()
-    resumed_stats = _STATS_ZERO
-    if mode == "resume":
-        done, resumed_stats = _scan_markers(sc, warehouse, fingerprint)
-    part_files = sorted(f for f in os.listdir(staged_dir)
-                        if f.startswith("part-") and f.endswith(".parquet"))
-    if part_files:
-        def _fsize(name, _d=staged_dir):
-            return (name, os.path.getsize(os.path.join(_d, name)))
-
-        size_of = dict(_par(part_files).map(_fsize).collect())
-        # longest-first scheduling: Spark runs partitions in order, so the
-        # biggest files go first to remove end-of-job stragglers (LPT)
-        part_files.sort(key=lambda f: (-size_of[f], f))
-
-    t_stage = time.time() - t_stage0
-    t_enc0 = time.time()
-    plan_json = plan.to_json()
-    encoded_stats = _STATS_ZERO
-    if part_files:
-        skip = frozenset(done)
-        sdir = staged_dir
-        rdd = sc.parallelize(part_files, len(part_files))
-        # markers are durably written per bucket by the task itself; each
-        # task folds its buckets' stats and the driver folds ONE tuple
-        encoded_stats = (rdd.map(lambda f: _encode_staged_file(
-            os.path.join(sdir, f), warehouse, plan_json, stripe_bytes,
-            fingerprint, skip)).reduce(_stats_add))
-
-    # corpus totals fold in resumed buckets' marker stats, so a post-resume
-    # manifest reports the WHOLE warehouse, not just this run's increment
-    totals = _stats_add(encoded_stats, resumed_stats)
-    manifest = {
-        "plan": json.loads(plan.to_json()),
-        "plan_hash": plan.plan_hash(),
-        "schema_ddl": schema_ddl,
-        "n_buckets": n_buckets,
-        "stripe_bytes": stripe_bytes,
-        "buckets_encoded_this_run": encoded_stats[0],
-        "buckets_resumed": len(done),
-        "rows": totals[1],
-        "bytes_in": totals[2],
-        "bytes_out": totals[3],
-        "stage_sec": round(t_stage, 3),
-        "encode_sec": round(time.time() - t_enc0, 3),
-        "task_wall_sec": round(encoded_stats[4], 3),
-        "fingerprint": fingerprint,
-    }
-    with open(manifest_path, "w") as f:
-        json.dump(manifest, f, indent=1)
-    return manifest
-
-
-def _encode_fused(spark, projected, plan: EncodePlan, warehouse: str, *,
-                  n_buckets: int, stripe_bytes: int, target_salt_bytes: int,
-                  mode: str, fingerprint: str, schema_ddl: str,
-                  manifest_path: str,
-                  salt_sample_fraction: float = 1.0) -> dict:
-    """Single-pass encode: shuffle by bucket and encode inside the shuffle
-    task via ``mapInArrow`` (see :func:`encode_table` ``fused=True``).
-
-    One hash partition can hold SEVERAL bucket ids (pmod(hash(b), n) is not
-    the identity), but a bucket id never splits across partitions — the
-    task iterator groups contiguous ``__bucket`` runs (the partition is
-    sorted by ``__bucket`` first) and feeds each run's batches straight
-    into the shared per-bucket stripe encoder.  Driver state stays
-    O(n_buckets ints); per-bucket stats come back as the mapInArrow output
-    rows and are folded by a Spark aggregation, not a collect."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
     t0 = time.time()
-    sc = spark.sparkContext
-    mdir = os.path.join(warehouse, "markers")
     done: set = set()
     resumed_stats = _STATS_ZERO
     if mode == "resume":
-        done, resumed_stats = _scan_markers(sc, warehouse, fingerprint)
-        # stale state from a different fingerprint (plan / input / bucket
-        # count changed) must not leak into the final warehouse: drop any
-        # marker, block dir, or lineage file without a valid marker.
-        # Shard files are compacted to their valid lines (one pass per
-        # shard, executed where the file is — the marker object count
-        # stays O(n_partitions), so this loop does too).
-        for p in glob.glob(os.path.join(mdir, "bucket_*.json")):
-            if int(os.path.basename(p)[len("bucket_"):-len(".json")]) not in done:
-                os.remove(p)
-        for p in glob.glob(os.path.join(mdir, "shard_*.jsonl")):
-            keep = []
-            with open(p) as f:
-                for line in f:
-                    try:
-                        m = json.loads(line)
-                    except ValueError:
-                        continue
-                    if m.get("fingerprint") == fingerprint \
-                            and int(m.get("bucket", -1)) in done:
-                        keep.append(line if line.endswith("\n")
-                                    else line + "\n")
-            if keep:
-                ctmp = f"{p}.{os.getpid()}.tmp"
-                with open(ctmp, "w") as f:
-                    f.writelines(keep)
-                os.replace(ctmp, p)
-            else:
-                os.remove(p)
+        done, resumed_stats = _scan_markers(spark.sparkContext, warehouse,
+                                            fingerprint)
+        # stale state (plan / input / bucket count changed, or a bucket
+        # without a valid marker) must not leak into the final warehouse
+        _compact_markers(warehouse,
+                         lambda m: m.get("fingerprint") == fingerprint
+                         and int(m.get("bucket", -1)) in done)
         for p in glob.glob(os.path.join(warehouse, "blocks", "bucket=*")):
             if int(p.split("bucket=")[-1]) not in done:
                 shutil.rmtree(p, ignore_errors=True)
@@ -861,7 +623,7 @@ def _encode_fused(spark, projected, plan: EncodePlan, warehouse: str, *,
                               salt_sample_fraction)
     if done:
         # completed buckets never enter the shuffle: anti-join against the
-        # (tiny, broadcast) done set — the fused-path resume skip
+        # (tiny, broadcast) done set — the resume skip
         done_df = spark.createDataFrame([(int(b),) for b in sorted(done)],
                                         "__bucket int")
         bucketed = bucketed.join(F.broadcast(done_df), "__bucket", "left_anti")
@@ -885,8 +647,7 @@ def _encode_fused(spark, projected, plan: EncodePlan, warehouse: str, *,
         for bucket, grp in itertools.groupby(
                 _iter_bucket_runs(batches, cols), key=lambda t: t[0]):
             stripes = _stripe_iter_batches((s for _, s in grp), sb)
-            m = _encode_bucket_core(bucket, stripes, wh, p, sb, fp,
-                                    marker_sink=sink)
+            m = _encode_bucket_core(bucket, stripes, wh, p, sb, fp, sink)
             yield pa.RecordBatch.from_pydict(
                 {"bucket": [bucket], "rows": [m["rows"]],
                  "bytes_in": [m["bytes_in"]], "bytes_out": [m["bytes_out"]],
@@ -906,6 +667,8 @@ def _encode_fused(spark, projected, plan: EncodePlan, warehouse: str, *,
     encoded_stats = (int(agg["n"] or 0), int(agg["rows"] or 0),
                      int(agg["bi"] or 0), int(agg["bo"] or 0),
                      float(agg["w"] or 0.0))
+    # corpus totals fold in resumed buckets' marker stats, so a post-resume
+    # manifest reports the WHOLE warehouse, not just this run's increment
     totals = _stats_add(encoded_stats, resumed_stats)
     manifest = {
         "plan": json.loads(plan_json),
@@ -939,21 +702,19 @@ def read_manifest(warehouse: str) -> dict:
         return json.load(f)
 
 
-def decode_table(spark, warehouse: str, *, shuffle: bool = False,
+def decode_table(spark, warehouse: str, *,
                  columns: list | None = None,
                  zone_filter: tuple | list | None = None):
     """Blocks → rows (the ``uncheckedRun`` analog,
     /root/reference/siphon/src/Siphon.hs:718-749, per-block not per-row).
 
-    Default path is SHUFFLE-FREE: the encoder writes each bucket's block
-    rows stripe-contiguously (all of a stripe's column blocks adjacent), so
-    a stateful ``mapInArrow`` reassembles stripes as they stream past —
+    SHUFFLE-FREE: the encoder writes each bucket's block rows
+    stripe-contiguously (all of a stripe's column blocks adjacent), so a
+    stateful ``mapInArrow`` reassembles stripes as they stream past —
     partial stripes at arrow-batch boundaries are buffered inside the
     iterator (the engine-level analog of the reference's cross-chunk parser
     continuations, Siphon.hs:612-616), and decode parallelism is the scan's
-    (one task per bucket file; stripes never span files).  ``shuffle=True``
-    keeps the groupBy(bucket, stripe) + applyInArrow fallback, which makes
-    no layout assumption.
+    (one task per bucket file; stripes never span files).
 
     ``columns`` decodes a SUBSET of the planned columns — the columnar-store
     payoff: non-requested columns' blocks are filtered out by the Catalyst
@@ -1048,11 +809,11 @@ def decode_table(spark, warehouse: str, *, shuffle: bool = False,
     if columns is not None:
         blocks_df = blocks_df.filter(F.col("column").isin(cols))
 
-    def assemble_one(names, blobs, n_rows=None, frags=None):
+    def assemble_one(names, blobs, n_rows, frags):
         arrays = {}
         frag_groups: dict[str, list] = {}
         for j, (name, blob) in enumerate(zip(names, blobs)):
-            if frags is not None and frags[j] is not None and frags[j] >= 0:
+            if frags[j] is not None and frags[j] >= 0:
                 # multi-block cell: collect the fragment set, reassemble below
                 frag_groups.setdefault(name, []).append(blob)
                 continue
@@ -1063,7 +824,7 @@ def decode_table(spark, warehouse: str, *, shuffle: bool = False,
             # count — a torn/garbled blocks file fails LOUDLY, never as
             # silent column misalignment (the RowErrorSize analog,
             # siphon/src/Siphon.hs:671-676)
-            if n_rows is not None and len(arr) != n_rows[j]:
+            if len(arr) != n_rows[j]:
                 raise B.BlockError(
                     f"block row-count mismatch for {name!r}: decoded "
                     f"{len(arr)}, recorded {n_rows[j]}")
@@ -1078,15 +839,6 @@ def decode_table(spark, warehouse: str, *, shuffle: bool = False,
             raise B.BlockError(f"stripe missing column blocks: {missing}")
         return pa.table(
             {c: arrays[c].cast(arrow_schema.field(c).type) for c in cols})
-
-    if shuffle:
-        def reassemble(table: pa.Table) -> pa.Table:
-            return assemble_one(table.column("column").to_pylist(),
-                                [b.as_py() for b in table.column("block")],
-                                frags=table.column("frag").to_pylist())
-
-        return (blocks_df.groupBy("bucket", "stripe")
-                .applyInArrow(reassemble, schema=out_schema))
 
     def stream_stripes(batches):
         pend_key = None

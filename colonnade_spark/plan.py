@@ -205,8 +205,8 @@ class EncodePlan:
 
     @property
     def stage_order(self) -> list:
-        """Total staging order: cluster prefix, then unique keys (ties
-        impossible → deterministic layout, required for resume)."""
+        """Total within-bucket sort order: cluster prefix, then unique keys
+        (ties impossible → deterministic layout, required for resume)."""
         return list(self.cluster_cols) + [k for k in self.key_cols
                                           if k not in self.cluster_cols]
 

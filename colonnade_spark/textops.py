@@ -378,6 +378,9 @@ def simhash_pairs_from_sigs(df_sigged, id_col: str, sig_col: str = "simhash",
     guarantee weakens from hamming<=3 to hamming<=2 inside oversized buckets:
     3 bit-diffs can spread 1+1+1 over the other three chunks).  Buckets still
     oversized after refinement are dropped (documented residual).
+
+    EAGER: the ``over.isEmpty()`` probe below runs the level-0 stage at
+    call time (see :func:`simhash_near_dup_pairs`).
     """
     from pyspark.sql import functions as F
 
@@ -490,7 +493,13 @@ def simhash_near_dup_pairs(spark, df, id_col: str, text_col: str,
       per doc + id, so the block footprint is negligible next to the
       corpus at any scale, and unlike a driver-local temp dir this form is
       also correct on a real cluster.
-    - ``sig_df`` — precomputed table, used as-is."""
+    - ``sig_df`` — precomputed table, used as-is.
+
+    EAGER: the call itself runs one Spark job.  To decide whether the Manku
+    refinement is needed at all, it probes the level-0 output with
+    ``over.isEmpty()``, so the signature UDF, the banding shuffle and the
+    level-0 kernel execute at call time (errors surface there too), not at
+    the first action on the returned DataFrame."""
     if sig_df is None:
         sigged = (with_simhash(df.select(id_col, text_col), text_col,
                                shingle=shingle).select(id_col, "simhash"))
@@ -674,16 +683,19 @@ def dedup_near_keep_first(spark, df, id_col: str, text_col: str,
     'one survivor per near-duplicate cluster')."""
     from pyspark.sql import functions as F
 
+    # resolve the dedup default ONCE, here, so both call sites below read
+    # the same value
+    minhash_kw.setdefault("dedup", True)
     pairs = minhash_near_dup_pairs(spark, df, id_col, text_col,
                                    threshold=threshold, **minhash_kw)
-    # when pairs are unique (the default path ends in dropDuplicates) both
+    # when pairs are unique (the dedup path ends in dropDuplicates) both
     # exploded directions are unique too — the edge distinct would dedup
     # nothing; skipping it removes one full pass over the edge list.  A
     # caller forcing dedup=False through minhash_kw gets the edge-level
     # dedup back (band-duplicated pairs would otherwise inflate every CC
     # round's join volume).
     comp = connected_components(df.select(id_col), pairs, id_col=id_col,
-                                dedup_edges=not minhash_kw.get("dedup", True))
+                                dedup_edges=not minhash_kw["dedup"])
     keep = (comp.groupBy("comp").agg(F.min(id_col).alias(id_col))
             .select(id_col))
     return df.join(keep, id_col, "left_semi")
@@ -1025,10 +1037,11 @@ def simhash_bucket_pair_kernel(key_cols: list, max_hamming: int,
     caller can route those buckets into the Manku refinement WITHOUT a
     separate bucket-size aggregation over the full exploded table (the
     sizes groupBy was a second full explode+shuffle+agg pass at any scale).
-    Requires exactly two key columns with key1 in [0, 65536) — true for the
-    (band, 16-bit-chunk) level-0 keys.  Sentinels are distinguishable from
-    real pairs by hamming < 0 (a real pair's hamming is always >= 0,
-    whatever the id values)."""
+    Requires exactly two key columns with key0 in [0, 2**47) and key1 in
+    [0, 65536) — true for the (band, 16-bit-chunk) level-0 keys; keys out
+    of range raise ``ValueError`` naming them.  Sentinels are
+    distinguishable from real pairs by hamming < 0 (a real pair's hamming
+    is always >= 0, whatever the id values)."""
     if emit_over_keys and len(key_cols) != 2:
         raise ValueError("emit_over_keys requires exactly two key columns")
 
@@ -1048,6 +1061,17 @@ def simhash_bucket_pair_kernel(key_cols: list, max_hamming: int,
                     s = starts[:-1][over]
                     k0 = payload[key_cols[0]][s].astype(np.int64)
                     k1 = payload[key_cols[1]][s].astype(np.int64)
+                    # (k0<<16)|k1 only round-trips for a 16-bit k1 and a
+                    # k0 that leaves the int64 sign bit clear: anything
+                    # wider would silently mis-route Manku buckets
+                    bad = ((k1 < 0) | (k1 >= 1 << 16)
+                           | (k0 < 0) | (k0 >= 1 << 47))
+                    if bad.any():
+                        raise ValueError(
+                            "emit_over_keys: sentinel keys out of range "
+                            f"(need {key_cols[0]} in [0, 2**47), "
+                            f"{key_cols[1]} in [0, 65536)): "
+                            f"{list(zip(k0[bad].tolist(), k1[bad].tolist()))[:5]}")
                     yield pa.RecordBatch.from_arrays(
                         [pa.array(np.full(over.size, -1, dtype=np.int64)),
                          pa.array((k0 << 16) | k1),

@@ -49,30 +49,41 @@ def test_lineage_and_codec_mix(spark, corpus_df, tmp_path):
 
 
 def test_resume_skips_completed_buckets(spark, corpus_df, tmp_path):
+    """Resume: completed buckets are anti-joined out BEFORE the shuffle and
+    their published files stay untouched; buckets whose marker was lost
+    re-encode (whether their block files survived or not), and the
+    manifest folds both."""
+    import shutil
+
     wh = str(tmp_path / "wh")
     plan = corpus_plan()
     m1 = engine.encode_table(spark, corpus_df, plan, wh, n_buckets=6,
                              input_token="t3")
     assert m1["buckets_encoded_this_run"] > 0
-    # simulate a crash that lost two buckets' outputs+markers
+    before = {p: os.path.getmtime(p)
+              for p in glob.glob(os.path.join(wh, "blocks", "*", "*.parquet"))}
+    # simulate a crash that lost two buckets' markers; one of them also
+    # lost its block files
     markers = engine.list_markers(wh)
     lost_ids = [m["bucket"] for m in markers[:2]]
     engine.invalidate_markers(wh, lost_ids)
-    before = {p: os.path.getmtime(p)
-              for p in glob.glob(os.path.join(wh, "blocks", "*", "*.parquet"))}
+    shutil.rmtree(os.path.join(wh, "blocks", f"bucket={lost_ids[1]}"))
     m2 = engine.encode_table(spark, corpus_df, plan, wh, n_buckets=6,
                              mode="resume", input_token="t3")
     assert m2["buckets_encoded_this_run"] == 2
     assert m2["buckets_resumed"] == m1["buckets_encoded_this_run"] - 2
-    after = {p: os.path.getmtime(p)
-             for p in glob.glob(os.path.join(wh, "blocks", "*", "*.parquet"))}
-    redone = {p for p in before if before[p] != after[p]}
-    assert all(f"bucket={b}" in " ".join(redone) for b in lost_ids)
-    untouched = {p for p in before if f"bucket={lost_ids[0]}" not in p
-                 and f"bucket={lost_ids[1]}" not in p}
-    assert all(before[p] == after[p] for p in untouched)  # no re-encode
+    assert m2["rows"] == N_FILES
+    for p, mt in before.items():
+        b = int(p.split("bucket=")[1].split("/")[0])
+        if b == lost_ids[0]:
+            assert os.path.getmtime(p) != mt, f"bucket {b} was not redone"
+        elif b not in lost_ids:
+            assert os.path.getmtime(p) == mt, f"bucket {b} was re-encoded"
+    assert os.path.exists(os.path.join(wh, "blocks", f"bucket={lost_ids[1]}",
+                                       "part-0.parquet"))
     # and the data still verifies
-    assert engine.verify_roundtrip(spark, corpus_df, plan, wh)["ok"]
+    summary = engine.verify_roundtrip(spark, corpus_df, plan, wh)
+    assert summary["ok"] and summary["rows_decoded"] == N_FILES
 
 
 def test_deterministic_blocks_across_runs(spark, corpus_df, tmp_path):
@@ -114,9 +125,9 @@ def test_verify_catches_corruption(spark, corpus_df, tmp_path):
 
 
 def test_resume_rejects_stale_markers_on_changed_input(spark, tmp_path):
-    """ADVICE regression: with mode=resume and a CHANGED input token, staging
-    is rebuilt and old markers must be invalidated — every bucket re-encodes
-    against the new data (no silent stale blocks)."""
+    """ADVICE regression: with mode=resume and a CHANGED input token, the
+    old markers must be invalidated — every bucket re-encodes against the
+    new data (no silent stale blocks)."""
     df1 = generate_corpus(spark, 100, seed=1)
     df2 = generate_corpus(spark, 100, seed=2)
     wh = str(tmp_path / "wh")
@@ -167,9 +178,8 @@ def test_decode_preserves_large_int64_with_nulls(spark, tmp_path):
 
 
 def test_decode_shuffle_free_plan_and_equivalence(spark, corpus_df, tmp_path):
-    """The default decode path must plan WITHOUT a shuffle (stripe rows are
-    file-contiguous by construction), and must produce exactly the rows of
-    the groupBy fallback path."""
+    """Decode must plan WITHOUT a shuffle (stripe rows are file-contiguous
+    by construction), and must produce exactly the source rows."""
     wh = str(tmp_path / "wh")
     plan = corpus_plan()
     engine.encode_table(spark, corpus_df, plan, wh, n_buckets=4,
@@ -177,9 +187,9 @@ def test_decode_shuffle_free_plan_and_equivalence(spark, corpus_df, tmp_path):
     fast = engine.decode_table(spark, wh)
     plan_str = fast._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan_str, plan_str
-    slow = engine.decode_table(spark, wh, shuffle=True)
+    src = plan.project(corpus_df).select(*plan.column_names)
     a = {tuple(r) for r in fast.collect()}
-    b = {tuple(r) for r in slow.collect()}
+    b = {tuple(r) for r in src.collect()}
     assert a == b and len(a) == N_FILES
 
 
@@ -289,42 +299,47 @@ def test_skew_salting_spreads_giant_repo(spark, tmp_path):
     engine.encode_table(spark, df, plan, wh, n_buckets=8,
                         stripe_bytes=256 << 10, target_salt_bytes=256 << 10,
                         input_token="skew")
-    staged = spark.read.parquet(os.path.join(wh, "staged"))
+    bucketed = engine.assign_buckets(plan.project(df), plan, 8,
+                                     target_salt_bytes=256 << 10)
     per_bucket = {r["__bucket"] for r in
-                  staged.filter("repo = 'megacorp/monorepo'")
+                  bucketed.filter("repo = 'megacorp/monorepo'")
                   .select("__bucket").distinct().collect()}
     assert len(per_bucket) >= 3, per_bucket   # giant repo spread by salt
     summary = engine.verify_roundtrip(spark, df, plan, wh)
     assert summary["ok"], summary
 
 
-def test_stripe_iter_honors_cap_exactly(tmp_path):
+def test_stripe_iter_honors_cap_exactly():
     """ADVICE regression: the cap is a true <= bound for multi-row stripes
     (the old searchsorted+1 closed at >= cap), and a giant row on a FRESH
-    stripe is isolated instead of dragging its neighbor past the cap."""
+    stripe is isolated instead of dragging its neighbor past the cap.  Cuts
+    are independent of how the rows arrive batched (1-row batches vs one
+    batch), so a bucket's stripes depend only on its row sequence."""
     import numpy as np
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from colonnade_spark.engine import _row_sizes, _stripe_iter
+    from colonnade_spark.engine import _row_sizes, _stripe_iter_batches
 
     # fresh-stripe giant: [1MB, 5MB] rows with a 4MB cap → two stripes
     t = pa.table({"s": ["a" * (1 << 20), "b" * (5 << 20)]})
-    p = str(tmp_path / "t.parquet")
-    pq.write_table(t, p)
-    assert [s.num_rows for s in _stripe_iter([p], ["s"], 4 << 20)] == [1, 1]
+    assert [s.num_rows for s in
+            _stripe_iter_batches(t.to_batches(), 4 << 20)] == [1, 1]
 
     rng = np.random.default_rng(7)
     vals = ["x" * int(n) for n in rng.integers(10, 3000, size=500)]
-    p2 = str(tmp_path / "t2.parquet")
-    pq.write_table(pa.table({"s": vals}), p2)
+    t2 = pa.table({"s": vals})
     cap = 8 << 10
     total = 0
-    for st in _stripe_iter([p2], ["s"], cap):
+    cuts = []
+    for st in _stripe_iter_batches(t2.to_batches(), cap):
         nbytes = sum(int(_row_sizes(b).sum()) for b in st.to_batches())
         assert st.num_rows == 1 or nbytes <= cap, (st.num_rows, nbytes)
         total += st.num_rows
-    assert total == 500
+        cuts.append(st.num_rows)
+    assert total == 500 and len(cuts) > 1
+    one_row = [st.num_rows for st in
+               _stripe_iter_batches(t2.to_batches(max_chunksize=1), cap)]
+    assert one_row == cuts
 
 
 def test_giant_cell_multiblock_roundtrip(spark, tmp_path):
@@ -348,11 +363,9 @@ def test_giant_cell_multiblock_roundtrip(spark, tmp_path):
     frag_rows = blocks_df.filter("column = 'content' AND frag >= 0").collect()
     assert len(frag_rows) >= 11, len(frag_rows)
     assert all(r["bytes_out"] <= (1 << 20) + 4096 for r in frag_rows)
-    # both decode paths agree on the giant cell
-    fast = engine.decode_table(spark, wh).filter("path = 'giant.txt'")
-    slow = engine.decode_table(spark, wh, shuffle=True).filter("path = 'giant.txt'")
-    assert fast.collect()[0]["content"] == big
-    assert slow.collect()[0]["content"] == big
+    # decode reassembles the giant cell and leaves the other rows intact
+    got = {tuple(r) for r in engine.decode_table(spark, wh).collect()}
+    assert got == {tuple(r) for r in rows}
 
 
 def test_cell_fragments_property_tiny_cap(spark, tmp_path):
@@ -460,8 +473,8 @@ def test_multi_zone_filter_conjunction(spark, tmp_path):
 
 def test_decode_pre_fragment_warehouse_backcompat(spark, tmp_path):
     """Review regression: warehouses written before the multi-block-cell
-    change have no 'frag' column — both decode paths must still read them
-    (every block is a whole-column block)."""
+    change have no 'frag' column — decode must still read them (every
+    block is a whole-column block)."""
     import pyarrow.parquet as pq
 
     rows = [("r", f"p{i}", f"c{i}", "py", f"small body {i} " * 10)
@@ -475,12 +488,12 @@ def test_decode_pre_fragment_warehouse_backcompat(spark, tmp_path):
         t = pq.read_table(fp)
         assert max(t.column("frag").to_pylist()) == -1   # truly frag-free
         pq.write_table(t.drop_columns(["frag"]), fp, compression="NONE")
-    assert engine.decode_table(spark, wh).count() == 300
-    assert engine.decode_table(spark, wh, shuffle=True).count() == 300
+    got = {tuple(r) for r in engine.decode_table(spark, wh).collect()}
+    assert got == set(rows) and len(got) == 300
 
 def test_engine_end_to_end_array_column(spark, tmp_path):
     """FULL engine path for an array<float> column (not just the blocks
-    layer): staging (parquet with the list column), per-bucket stripe
+    layer): the shuffle with the list column, per-bucket stripe
     cutting (rough row-size floor for nested types), list-block encode,
     shuffle-free decode — values back bit-exact, lengths intact."""
     from colonnade_spark import engine
@@ -502,76 +515,72 @@ def test_engine_end_to_end_array_column(spark, tmp_path):
         assert got[k][0] == want[k][0]          # float32 bit-exact
 
 
-def test_fused_matches_staged_byte_identical(spark, corpus_df, tmp_path):
-    """The fused (in-shuffle mapInArrow) and staged (parquet re-read) paths
-    must publish byte-identical bucket files: stripe cuts are batching-
-    independent and both sort by (__bucket, stage_order).  This is the
-    equivalence that lets a mixed fleet (or a staged→fused migration)
-    resume against either's markers."""
-    plan = corpus_plan()
-    w1, w2 = str(tmp_path / "staged"), str(tmp_path / "fused")
-    m1 = engine.encode_table(spark, corpus_df, plan, w1, n_buckets=5,
-                             input_token="tf")
-    m2 = engine.encode_table(spark, corpus_df, plan, w2, n_buckets=5,
-                             input_token="tf", fused=True)
-    assert m2["rows"] == m1["rows"] == N_FILES
-    assert m2["bytes_in"] == m1["bytes_in"]
-    assert m2["bytes_out"] == m1["bytes_out"]
-    files1 = sorted(glob.glob(os.path.join(w1, "blocks", "bucket=*",
-                                           "part-0.parquet")))
-    assert files1
-    for p1 in files1:
-        p2 = p1.replace(w1, w2)
-        with open(p1, "rb") as f1, open(p2, "rb") as f2:
-            assert f1.read() == f2.read(), f"bucket differs: {p1}"
-    summary = engine.verify_roundtrip(spark, corpus_df, plan, w2)
-    assert summary["ok"] and summary["rows_decoded"] == N_FILES
+# sha256 per bucket over the blocks table CONTENTS in file row order
+# (stripe, column, codec, frag, n_rows, block bytes) for the module corpus,
+# corpus_plan() and n_buckets=5 — not over the parquet file bytes, which
+# embed the pyarrow version.  These values were produced identically by the
+# former two-phase staged encode (parquet re-read, 8192-row batches) and by
+# the single-pass encode (shuffle arrow batches) before the staged path was
+# removed.
+PINNED_BLOCK_DIGESTS = {
+    0: "930260f3de1e866bd9e11ab53f3c4363742deda1115ae95f3707567e66cf9f6d",
+    1: "01383d32d806511d59626a596ae85a8826b386b501b766fad0369c77164ad62a",
+    2: "013d4d0bac1f6cda94128bb62d5e119b9a1bded7b54092a32a81efa556bafcd5",
+    3: "c76b4d1df41497d2b0b3ced7a6ec6b97b5618a3dfafce2cb093375980fc5185a",
+    4: "fd1368d90464921fcceb1e05b24d9813943a6e332a4302d726f555085807e479",
+}
 
 
-def test_fused_resume_skips_completed(spark, corpus_df, tmp_path):
-    """Fused-path resume: completed buckets are anti-joined out BEFORE the
-    shuffle; their published files stay untouched, lost buckets re-encode,
-    and the manifest folds both."""
-    import shutil
+def _blocks_digest(path):
+    import hashlib
 
-    plan = corpus_plan()
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path, columns=["stripe", "column", "codec", "frag",
+                                     "n_rows", "block"])
+    h = hashlib.sha256()
+    for *meta, blk in zip(*(t.column(c).to_pylist() for c in t.column_names)):
+        h.update(json.dumps(meta).encode())
+        h.update(len(blk).to_bytes(8, "little"))
+        h.update(blk)
+    return h.hexdigest()
+
+
+def test_blocks_match_pinned_digest(spark, corpus_df, tmp_path):
+    """Block bytes are a pure function of each bucket's row sequence: the
+    encode reproduces the pinned per-bucket digests exactly (any change to
+    stripe cutting, codec selection or block framing shows up here)."""
     wh = str(tmp_path / "wh")
-    engine.encode_table(spark, corpus_df, plan, wh, n_buckets=5,
-                        input_token="tfr", fused=True)
-    before = {p: os.path.getmtime(p) for p in
-              glob.glob(os.path.join(wh, "blocks", "bucket=*",
-                                     "part-0.parquet"))}
-    markers = engine.list_markers(wh)
-    lost = [m["bucket"] for m in markers[:2]]
-    engine.invalidate_markers(wh, lost)
-    for b in lost:
-        shutil.rmtree(os.path.join(wh, "blocks", f"bucket={b}"),
-                      ignore_errors=True)
-    m = engine.encode_table(spark, corpus_df, plan, wh, n_buckets=5,
-                            mode="resume", input_token="tfr", fused=True)
-    assert m["buckets_resumed"] == len(markers) - 2
-    assert m["buckets_encoded_this_run"] == 2
+    m = engine.encode_table(spark, corpus_df, corpus_plan(), wh, n_buckets=5,
+                            input_token="tf")
     assert m["rows"] == N_FILES
-    for p, mt in before.items():
-        b = int(p.split("bucket=")[1].split("/")[0])
-        if b not in lost:
-            assert os.path.getmtime(p) == mt, f"bucket {b} was re-encoded"
-    summary = engine.verify_roundtrip(spark, corpus_df, plan, wh)
-    assert summary["ok"] and summary["rows_decoded"] == N_FILES
+    got = {int(p.split("bucket=")[1].split("/")[0]): _blocks_digest(p)
+           for p in glob.glob(os.path.join(wh, "blocks", "bucket=*",
+                                           "part-0.parquet"))}
+    assert got == PINNED_BLOCK_DIGESTS
+
+
+def test_encode_rejects_removed_staged_path(tmp_path):
+    """fused=False named the removed two-phase staged encode: it must fail
+    loudly, never quietly run the single-pass encode instead."""
+    wh = str(tmp_path / "wh")
+    with pytest.raises(ValueError, match="staged"):
+        engine.encode_table(None, None, corpus_plan(), wh, fused=False)
+    assert not os.path.exists(wh)
 
 
 def test_fused_resume_invalidates_stale_fingerprint(spark, corpus_df,
                                                     tmp_path):
-    """A fused resume against markers from a DIFFERENT fingerprint (here: a
+    """A resume against markers from a DIFFERENT fingerprint (here: a
     different bucket count) must discard every stale marker/block and
     re-encode the full input — never mix two layouts in one warehouse."""
     plan = corpus_plan()
     wh = str(tmp_path / "wh")
     engine.encode_table(spark, corpus_df, plan, wh, n_buckets=7,
-                        input_token="tsf", fused=True)
+                        input_token="tsf")
     os.remove(os.path.join(wh, "manifest.json"))
     m = engine.encode_table(spark, corpus_df, plan, wh, n_buckets=3,
-                            mode="resume", input_token="tsf", fused=True)
+                            mode="resume", input_token="tsf")
     assert m["buckets_resumed"] == 0
     assert m["rows"] == N_FILES
     stale = [p for p in glob.glob(os.path.join(wh, "blocks", "bucket=*"))
@@ -593,8 +602,7 @@ def test_decode_schema_nested_type_last(spark, tmp_path):
          .with_keys("vec_id"))
     wh = str(tmp_path / "wh")
     engine.encode_table(spark, src, p, wh, n_buckets=2,
-                        stripe_bytes=1 << 20, input_token="emb-last",
-                        fused=True)
+                        stripe_bytes=1 << 20, input_token="emb-last")
     got = {r["vec_id"]: r["embedding"]
            for r in engine.decode_table(spark, wh).collect()}
     want = {r["vec_id"]: r["embedding"] for r in src.collect()}
@@ -662,7 +670,7 @@ def test_marker_shards_are_per_task_and_torn_tail_is_skipped(
     wh = str(tmp_path / "wh")
     plan = corpus_plan()
     m = engine.encode_table(spark, corpus_df, plan, wh, n_buckets=8,
-                            input_token="shards", fused=True)
+                            input_token="shards")
     shards = glob.glob(os.path.join(wh, "markers", "shard_*.jsonl"))
     legacy = glob.glob(os.path.join(wh, "markers", "bucket_*.json"))
     assert shards and not legacy
@@ -679,7 +687,35 @@ def test_marker_shards_are_per_task_and_torn_tail_is_skipped(
     engine.invalidate_markers(wh, [b0])
     assert len(engine.list_markers(wh)) == n_buckets_done - 1
     m2 = engine.encode_table(spark, corpus_df, plan, wh, n_buckets=8,
-                             mode="resume", input_token="shards", fused=True)
+                             mode="resume", input_token="shards")
     assert m2["buckets_encoded_this_run"] == 1
     assert m2["buckets_resumed"] == n_buckets_done - 1
     assert m2["rows"] == m["rows"]
+
+
+def test_marker_compaction_keeps_legacy_files_and_drops_torn_lines(tmp_path):
+    """Shards and legacy per-bucket marker files go through one reader and
+    one compaction: a torn tail line is skipped and dropped by the rewrite,
+    an emptied shard is removed, and a legacy file is removed only when its
+    bucket is invalidated."""
+    wh = str(tmp_path / "wh")
+    mdir = os.path.join(wh, "markers")
+    os.makedirs(mdir)
+    shard = os.path.join(mdir, "shard_1_a.jsonl")
+    with open(shard, "w") as f:
+        f.write(json.dumps({"bucket": 0, "rows": 1}) + "\n"
+                + json.dumps({"bucket": 1, "rows": 2}) + "\n"
+                + '{"bucket": 9, "ro')
+    lone = os.path.join(mdir, "shard_2_b.jsonl")
+    with open(lone, "w") as f:
+        f.write(json.dumps({"bucket": 2, "rows": 3}) + "\n")
+    for b in (3, 4):
+        with open(os.path.join(mdir, f"bucket_{b}.json"), "w") as f:
+            json.dump({"bucket": b, "rows": 4}, f)
+    assert [m["bucket"] for m in engine.list_markers(wh)] == [0, 1, 2, 3, 4]
+    engine.invalidate_markers(wh, [1, 2, 4])
+    assert [m["bucket"] for m in engine.list_markers(wh)] == [0, 3]
+    with open(shard) as f:
+        assert f.read() == json.dumps({"bucket": 0, "rows": 1}) + "\n"
+    assert not os.path.exists(lone)
+    assert sorted(os.listdir(mdir)) == ["bucket_3.json", "shard_1_a.jsonl"]

@@ -752,6 +752,37 @@ def test_simhash_kernel_emits_oversized_bucket_sentinels():
         simhash_bucket_pair_kernel(["a"], 3, 8, emit_over_keys=True)
 
 
+def test_simhash_sentinel_rejects_wide_keys():
+    """The sentinel packs (key0<<16)|key1 into one int64: an oversized run
+    whose key1 needs more than 16 bits (or whose key0 would reach the sign
+    bit) must raise and name the offending keys, not emit a sentinel that
+    routes a different bucket."""
+    import pyarrow as pa
+
+    from colonnade_spark.textops import simhash_bucket_pair_kernel
+
+    def run(k0, k1, n=12):
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array([k0] * n, type=pa.int64()),
+             pa.array([k1] * n, type=pa.int64()),
+             pa.array(range(n), type=pa.int64()),
+             pa.array(range(n), type=pa.int64())],
+            names=["band", "bh", "id", "sig"])
+        return list(simhash_bucket_pair_kernel(
+            ["band", "bh"], 64, 8, emit_over_keys=True)(iter([batch])))
+
+    # (1, 65536+9) would pack to the sentinel of bucket (2, 9)
+    with pytest.raises(ValueError, match=r"\(1, 65545\)"):
+        run(1, 65536 + 9)
+    with pytest.raises(ValueError, match="out of range"):
+        run(1 << 47, 3)
+    with pytest.raises(ValueError, match="out of range"):
+        run(0, -1)
+    # in-range keys at the limits still pack exactly
+    out = run((1 << 47) - 1, 65535)
+    assert out[0].column(1)[0].as_py() == (((1 << 47) - 1) << 16) | 65535
+
+
 def test_simhash_pairs_output_free_of_sentinels_when_capped(spark):
     """End-to-end: a capped corpus (Manku level-1 fires) must produce the
     same pair set as before the sentinel router, with no sentinel rows in

@@ -3,10 +3,10 @@
 Pipeline (SURVEY.md §3.2-3.3 generalized to Spark):
 
 encode:  plan.project(df)  → salt/bucket assignment (skew pre-pass)
-         → one pass: repartition(n_buckets, __bucket) +
-           sortWithinPartitions(__bucket, keys) + mapInArrow, so each
-           bucket is encoded INSIDE the shuffle task and the corpus is
-           materialized once (the shuffle files)
+         → one pass: repartitionById(n_buckets, __bucket) +
+           sortWithinPartitions(__bucket, keys) + mapInArrow, so bucket b
+           is encoded INSIDE shuffle task b (one bucket per task) and the
+           corpus is materialized once (the shuffle files)
          → per-bucket encode: stream record batches, cut size-capped
            row-aligned stripes, encode each column to a framed block,
            write blocks+lineage, append a checkpoint marker line
@@ -257,9 +257,10 @@ def _pin_arrow_threads() -> None:
 
 def _iter_bucket_runs(batches, cols):
     """Split a stream of arrow batches sorted by ``__bucket`` into
-    ``(bucket_id, sub_batch)`` pairs at bucket transitions.  A bucket never
-    splits across shuffle partitions, so grouping the pairs with
-    ``itertools.groupby`` reassembles each bucket's full row sequence."""
+    ``(bucket_id, sub_batch)`` pairs at bucket transitions.  The encode
+    places bucket b in shuffle partition b, so a task sees one bucket id
+    and grouping the pairs with ``itertools.groupby`` yields that bucket's
+    full row sequence; the split only guards the id against the data."""
     for b in batches:
         if b.num_rows == 0:
             continue
@@ -274,18 +275,15 @@ def _iter_bucket_runs(batches, cols):
 class _MarkerShard:
     """Append-only per-task marker shard: one ``markers/shard_*.jsonl``
     file per task ATTEMPT, one JSON line per completed bucket, flushed as
-    soon as each bucket's blocks are published.
+    soon as the bucket's blocks are published.  Each encode task holds one
+    bucket, so a fresh encode writes one shard per encoded bucket (plus
+    one per retried or speculative attempt).
 
-    This keeps marker durability per BUCKET (a killed task resumes its
-    completed buckets) while the marker OBJECT count is O(task attempts) =
-    O(n_partitions), not O(n_buckets) — at the ~4M-bucket scale SURVEY §8
-    cites, 4M files in one directory is an object-store/filesystem hazard
-    independent of the driver (round-5 verdict item 4).  Crash semantics
-    match the old per-bucket atomic rename under the engine's process-kill
-    model: a line is written only AFTER its bucket's blocks+lineage
-    replace, a torn tail line fails to parse and is skipped by the scan
-    (that bucket simply redoes), and duplicate-attempt shards are benign
-    (byte-identical blocks; the scan dedups by bucket id)."""
+    Crash semantics match a per-bucket atomic rename under the engine's
+    process-kill model: a line is written only AFTER its bucket's
+    blocks+lineage replace, a torn tail line fails to parse and is skipped
+    by the reader (that bucket simply redoes), and duplicate-attempt lines
+    are benign (byte-identical blocks; the resume counts a bucket once)."""
 
     def __init__(self, warehouse: str):
         self._dir = os.path.join(warehouse, "markers")
@@ -325,13 +323,15 @@ def _read_markers(path: str) -> list:
         return out
 
 
-def _compact_markers(warehouse: str, keep) -> None:
-    """Drop every marker for which ``keep(marker)`` is false.  Each shard is
-    rewritten to its kept lines (atomic tmp + replace) or removed when none
-    remain; a legacy per-bucket file is removed unless kept.  Torn lines
-    are dropped on the way."""
+def _compact_markers(warehouse: str, keep) -> list:
+    """Drop every marker for which ``keep(marker)`` is false and return the
+    kept ones.  Each shard is rewritten to its kept lines (atomic tmp +
+    replace) or removed when none remain; a legacy per-bucket file is
+    removed unless kept.  Torn lines are dropped on the way."""
+    out = []
     for p in _marker_paths(warehouse):
         kept = [m for m in _read_markers(p) if keep(m)]
+        out += kept
         if not kept:
             os.remove(p)
         elif p.endswith(".jsonl"):
@@ -339,12 +339,13 @@ def _compact_markers(warehouse: str, keep) -> None:
             with open(tmp, "w") as f:
                 f.writelines(json.dumps(m) + "\n" for m in kept)
             os.replace(tmp, p)
+    return out
 
 
 def list_markers(warehouse: str) -> list:
     """Every marker currently published, torn lines skipped, one dict per
-    bucket (ops/test hook — the engine uses the distributed
-    :func:`_scan_markers` instead)."""
+    bucket (ops/test hook — a resume reads the markers while it compacts
+    them, in :func:`_compact_markers`)."""
     out: dict = {}
     for p in _marker_paths(warehouse):
         for m in _read_markers(p):
@@ -488,8 +489,8 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
     # the marker carries the FULL fingerprint (plan + input token + bucket
     # count + salt params), not just the plan hash: a resume against
     # changed input or a different bucketing must not trust stale markers.
-    # One marker LINE appended to the task's shard file — O(n_partitions)
-    # marker objects; see _MarkerShard for the durability argument
+    # One marker LINE appended to the task's shard file; see _MarkerShard
+    # for the durability argument
     marker = {"bucket": bucket, "plan_hash": plan.plan_hash(),
               "fingerprint": fingerprint, "stripes": stripe,
               "rows": n_rows_total, "bytes_in": total_in, "bytes_out": total_out,
@@ -512,33 +513,6 @@ def _stats_add(a: tuple, b: tuple) -> tuple:
     return tuple(x + y for x, y in zip(a, b))
 
 
-def _scan_markers(sc, warehouse: str, fingerprint: str) -> tuple:
-    """Distributed resume scan: read every bucket marker in EXECUTORS (one
-    serial driver open per bucket was the round-3 bottleneck at ~4M
-    buckets), keep only full-fingerprint matches (plan AND input AND bucket
-    count AND salt params — stale markers must never validate against a
-    re-derived layout), and fold their stats.  Returns (done bucket-id set,
-    folded stats tuple).  Executors parse the files with
-    :func:`_read_markers`, the reader the driver-side hooks use too."""
-    mpaths = _marker_paths(warehouse)
-    done, stats = set(), _STATS_ZERO
-    if not mpaths:
-        return done, stats
-    rdd = sc.parallelize(mpaths, max(1, min(len(mpaths),
-                                            4 * int(sc.defaultParallelism))))
-    rows = (rdd.flatMap(_read_markers)
-            .filter(lambda m: m.get("fingerprint") == fingerprint)
-            .map(lambda m: (m["bucket"], _marker_stats(m)))
-            .collect())
-    for b, st in rows:
-        # duplicate attempts / overlapping shards: count each bucket once
-        # (byte-identical blocks make any copy equally valid)
-        if b not in done:
-            done.add(b)
-            stats = _stats_add(stats, st)
-    return done, stats
-
-
 def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
                  n_buckets: int = 32, stripe_bytes: int = 4 << 20,
                  target_salt_bytes: int = 64 << 20,
@@ -551,21 +525,24 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
     (skip completed buckets — the checkpoint path).
 
     One pass: the per-bucket encode happens INSIDE the shuffle task
-    (``repartition(__bucket)`` → ``sortWithinPartitions`` →
+    (``repartitionById(__bucket)`` → ``sortWithinPartitions`` →
     ``mapInArrow``), so the corpus is materialized once (the shuffle
-    files).  One hash partition can hold SEVERAL bucket ids (pmod(hash(b),
-    n) is not the identity), but a bucket id never splits across
-    partitions — the task iterator groups contiguous ``__bucket`` runs (the
-    partition is sorted by ``__bucket`` first) and feeds each run's batches
-    straight into the per-bucket stripe encoder.  Driver state stays
-    O(n_buckets ints); per-bucket stats come back as the mapInArrow output
-    rows and are folded by a Spark aggregation, not a collect.
+    files).  Bucket b goes to shuffle partition b: one bucket per task, so
+    the buckets spread over the cores (hash placement stacked small ids —
+    pmod(murmur3(b), 4) sends ids 0-3 to partitions 3, 3, 2, 3).  The task
+    feeds its bucket's sorted batches straight into the per-bucket stripe
+    encoder.  Driver state stays O(n_buckets ints); per-bucket stats come
+    back as the mapInArrow output rows and are folded by a Spark
+    aggregation, not a collect.
 
     Checkpoints are per bucket (marker lines, byte-identical blocks).  A
-    resume keeps the buckets whose marker matches the full fingerprint,
-    drops every other marker, block dir and lineage file, and re-shuffles
-    only the rows of the remaining buckets (completed buckets are
-    anti-joined out BEFORE the shuffle).  The shuffle itself is not
+    resume reads the markers on the driver, keeps the buckets whose marker
+    matches the full fingerprint (plan AND input AND bucket count AND salt
+    params — a stale marker must never validate against a re-derived
+    layout), and drops every other marker, block dir and lineage file; it
+    runs no Spark job of its own before the encode.  It re-shuffles only
+    the rows of the remaining buckets (completed buckets are anti-joined
+    out BEFORE the shuffle).  The shuffle itself is not
     checkpointed: keeping shuffle output across executor loss at scale is
     Spark's job (external shuffle service or executor decommissioning), not
     the engine's.
@@ -605,13 +582,15 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
     done: set = set()
     resumed_stats = _STATS_ZERO
     if mode == "resume":
-        done, resumed_stats = _scan_markers(spark.sparkContext, warehouse,
-                                            fingerprint)
         # stale state (plan / input / bucket count changed, or a bucket
         # without a valid marker) must not leak into the final warehouse
-        _compact_markers(warehouse,
-                         lambda m: m.get("fingerprint") == fingerprint
-                         and int(m.get("bucket", -1)) in done)
+        for m in _compact_markers(
+                warehouse, lambda m: m.get("fingerprint") == fingerprint):
+            # duplicate attempts: count each bucket once (byte-identical
+            # blocks make any copy equally valid)
+            if m["bucket"] not in done:
+                done.add(m["bucket"])
+                resumed_stats = _stats_add(resumed_stats, _marker_stats(m))
         for p in glob.glob(os.path.join(warehouse, "blocks", "bucket=*")):
             if int(p.split("bucket=")[-1]) not in done:
                 shutil.rmtree(p, ignore_errors=True)
@@ -624,8 +603,8 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
     if done:
         # completed buckets never enter the shuffle: anti-join against the
         # (tiny, broadcast) done set — the resume skip
-        done_df = spark.createDataFrame([(int(b),) for b in sorted(done)],
-                                        "__bucket int")
+        done_df = spark.createDataFrame(
+            pa.table({"__bucket": pa.array(sorted(done), pa.int32())}))
         bucketed = bucketed.join(F.broadcast(done_df), "__bucket", "left_anti")
 
     order = plan.stage_order or plan.column_names
@@ -653,7 +632,7 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
                  "bytes_in": [m["bytes_in"]], "bytes_out": [m["bytes_out"]],
                  "wall_s": [m["wall_s"]]}, schema=out_schema)
 
-    shuffled = (bucketed.repartition(n_buckets, F.col("__bucket"))
+    shuffled = (bucketed.repartitionById(n_buckets, F.col("__bucket"))
                 .sortWithinPartitions("__bucket", *order))
     stats_df = shuffled.mapInArrow(
         encode_parts,
@@ -700,6 +679,23 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
 def read_manifest(warehouse: str) -> dict:
     with open(os.path.join(warehouse, "manifest.json")) as f:
         return json.load(f)
+
+
+def _read_blocks(spark, warehouse: str):
+    """The warehouse's blocks table, its schema taken from one bucket
+    file's footer (what Spark's inference reads too, minus the one-task
+    inference job it runs per call) plus the ``bucket`` partition column.
+    Warehouses written before multi-block cells have no ``frag`` column;
+    callers add it."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import IntegerType
+
+    bdir = os.path.join(warehouse, "blocks")
+    files = sorted(glob.glob(os.path.join(bdir, "bucket=*", "[!_.]*.parquet")))
+    if not files:
+        raise FileNotFoundError(f"no block files under {bdir}")
+    schema = from_arrow_schema(pq.read_schema(files[0]))
+    return spark.read.schema(schema.add("bucket", IntegerType())).parquet(bdir)
 
 
 def decode_table(spark, warehouse: str, *,
@@ -761,7 +757,7 @@ def decode_table(spark, warehouse: str, *,
                            for f in keep_fields)
     arrow_schema = to_arrow_schema(_parse_datatype_string(out_schema))
 
-    blocks_df = spark.read.parquet(os.path.join(warehouse, "blocks"))
+    blocks_df = _read_blocks(spark, warehouse)
     if "frag" not in blocks_df.columns:
         # warehouses written before multi-block cells existed: every block
         # is a whole-column block (back-compat, same stance as
@@ -894,7 +890,7 @@ def decode_giant_cells(spark, warehouse: str, column: str, *,
     """
     from pyspark.sql import functions as F
 
-    bdf = spark.read.parquet(os.path.join(warehouse, "blocks"))
+    bdf = _read_blocks(spark, warehouse)
     if "frag" not in bdf.columns:  # pre-fragment warehouse: nothing to do
         bdf = bdf.withColumn("frag", F.lit(-1))
     bdf = bdf.filter((F.col("column") == column) & (F.col("frag") >= 0))

@@ -16,7 +16,6 @@ and decode failures — as a DataFrame, never an exception.
 from __future__ import annotations
 
 import json
-import os
 
 import pandas as pd
 
@@ -53,14 +52,14 @@ def resolve_stripe(present: list, expected: list) -> list:
 def validate_blocks(spark, warehouse: str, expected_cols: list | None = None):
     """Full-warehouse validation job → DataFrame(bucket, stripe, column,
     kind, detail); empty result = sound warehouse."""
-    from .engine import read_manifest
+    from .engine import _read_blocks, read_manifest
     from .shipping import ensure_shipped
 
     ensure_shipped(spark)
     if expected_cols is None:
         manifest = read_manifest(warehouse)
         expected_cols = [s["name"] for s in manifest["plan"]["specs"]]
-    blocks_df = spark.read.parquet(os.path.join(warehouse, "blocks"))
+    blocks_df = _read_blocks(spark, warehouse)
 
     def check(key, pdf: pd.DataFrame) -> pd.DataFrame:
         bucket, stripe = int(key[0]), int(key[1])

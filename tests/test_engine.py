@@ -4,6 +4,7 @@ skew salting, checkpoint/resume (SURVEY.md §5.2 items 4-6)."""
 import glob
 import json
 import os
+import re
 
 import pytest
 
@@ -663,10 +664,11 @@ def test_verify_roundtrip_all_key_plan(spark, tmp_path):
 
 def test_marker_shards_are_per_task_and_torn_tail_is_skipped(
         spark, corpus_df, tmp_path):
-    """Round-6 marker store: markers live in O(n_partitions) shard files
-    (one per task attempt), not one file per bucket; list/invalidate keep
-    per-bucket granularity; a torn tail line (task killed mid-append) is
-    skipped by the scan instead of poisoning the resume."""
+    """Marker store: markers live in shard files, one per task attempt
+    (each encode task holds one bucket, so at most one file per encoded
+    bucket); list/invalidate keep per-bucket granularity; a torn tail line
+    (task killed mid-append) is skipped by the reader instead of poisoning
+    the resume."""
     wh = str(tmp_path / "wh")
     plan = corpus_plan()
     m = engine.encode_table(spark, corpus_df, plan, wh, n_buckets=8,
@@ -675,7 +677,7 @@ def test_marker_shards_are_per_task_and_torn_tail_is_skipped(
     legacy = glob.glob(os.path.join(wh, "markers", "bucket_*.json"))
     assert shards and not legacy
     n_buckets_done = m["buckets_encoded_this_run"]
-    assert len(shards) <= n_buckets_done          # strictly fewer files
+    assert len(shards) <= n_buckets_done          # no more files than buckets
     markers = engine.list_markers(wh)
     assert len(markers) == n_buckets_done
     # torn tail: append garbage to one shard — scan must ignore it
@@ -691,6 +693,74 @@ def test_marker_shards_are_per_task_and_torn_tail_is_skipped(
     assert m2["buckets_encoded_this_run"] == 1
     assert m2["buckets_resumed"] == n_buckets_done - 1
     assert m2["rows"] == m["rows"]
+
+
+def test_encode_places_one_bucket_per_task(spark, corpus_df, tmp_path):
+    """Bucket b goes to shuffle partition b: a fresh encode writes one
+    marker shard per encoded bucket, each holding exactly one marker line.
+    Hash placement stacked several small bucket ids into one task (4
+    buckets ran as 2 tasks).  The footer-derived blocks schema equals the
+    one Spark infers."""
+    plan = corpus_plan()
+    for n_buckets in (4, 8):
+        wh = str(tmp_path / f"wh{n_buckets}")
+        m = engine.encode_table(spark, corpus_df, plan, wh,
+                                n_buckets=n_buckets, input_token="place")
+        shards = glob.glob(os.path.join(wh, "markers", "shard_*.jsonl"))
+        assert len(shards) == m["buckets_encoded_this_run"], n_buckets
+        for p in shards:
+            with open(p) as f:
+                assert len(f.readlines()) == 1, (n_buckets, p)
+    inferred = spark.read.parquet(os.path.join(wh, "blocks")).schema
+    assert engine._read_blocks(spark, wh).schema == inferred
+
+
+def test_blocks_read_fails_loudly_without_block_files(spark, tmp_path):
+    """A warehouse with no block file is an error naming the directory,
+    not an empty or inferred-nothing table."""
+    wh = str(tmp_path / "wh")
+    os.makedirs(os.path.join(wh, "blocks"))
+    with pytest.raises(FileNotFoundError,
+                       match=re.escape(os.path.join(wh, "blocks"))):
+        engine.decode_giant_cells(spark, wh, "content")
+
+
+def test_resume_reads_markers_on_driver_and_counts_each_bucket_once(
+        spark, corpus_df, tmp_path):
+    """The resume's one marker read: a valid line, a stale-fingerprint
+    line, a duplicate line of the valid bucket (a retried task attempt)
+    and a torn tail in one shard, plus a legacy per-bucket file.  Each
+    valid bucket counts once in buckets_resumed and in the totals; the
+    stale and torn lines leave the disk, the legacy file stays."""
+    wh = str(tmp_path / "wh")
+    plan = corpus_plan()
+    m1 = engine.encode_table(spark, corpus_df, plan, wh, n_buckets=4,
+                             input_token="dup")
+    markers = engine.list_markers(wh)
+    assert [m["bucket"] for m in markers] == [0, 1, 2, 3]
+    mdir = os.path.join(wh, "markers")
+    for p in glob.glob(os.path.join(mdir, "*")):
+        os.remove(p)
+    valid, stale_src, legacy = markers[0], markers[1], markers[2]
+    stale = dict(stale_src, fingerprint="stale")
+    shard = os.path.join(mdir, "shard_1_a.jsonl")
+    with open(shard, "w") as f:
+        f.write(json.dumps(valid) + "\n" + json.dumps(stale) + "\n"
+                + json.dumps(valid) + "\n" + '{"bucket": 3, "finger')
+    legacy_path = os.path.join(mdir, f"bucket_{legacy['bucket']}.json")
+    with open(legacy_path, "w") as f:
+        json.dump(legacy, f)
+    m2 = engine.encode_table(spark, corpus_df, plan, wh, n_buckets=4,
+                             mode="resume", input_token="dup")
+    assert m2["buckets_resumed"] == 2
+    assert m2["buckets_encoded_this_run"] == 2
+    assert (m2["rows"], m2["bytes_in"], m2["bytes_out"]) == \
+        (m1["rows"], m1["bytes_in"], m1["bytes_out"])
+    with open(shard) as f:
+        assert [json.loads(line) for line in f] == [valid, valid]
+    with open(legacy_path) as f:
+        assert json.load(f) == legacy
+    assert [m["bucket"] for m in engine.list_markers(wh)] == [0, 1, 2, 3]
 
 
 def test_marker_compaction_keeps_legacy_files_and_drops_torn_lines(tmp_path):

@@ -87,6 +87,22 @@ def _zone_str_bounds(mn: bytes, mx: bytes):
         smax = bytes(p[: i] + bytes([p[i] + 1])) if i >= 0 else None
     return smin, smax
 
+
+def _is_bytes_like(t) -> bool:
+    """String and binary types, plain or large: the columns that carry
+    string zone bounds and may hold a multi-block cell."""
+    return (pa.types.is_string(t) or pa.types.is_binary(t)
+            or pa.types.is_large_string(t) or pa.types.is_large_binary(t))
+
+
+def _as_binary(arr):
+    """A bytes-like array as (large_)binary, so min/max and slices work on
+    raw bytes (Spark's UTF8String/binary order)."""
+    large = (pa.types.is_large_string(arr.type)
+             or pa.types.is_large_binary(arr.type))
+    return arr.cast(pa.large_binary() if large else pa.binary())
+
+
 LINEAGE_SCHEMA = pa.schema([
     ("stripe", pa.int64()),
     ("column", pa.string()),
@@ -385,10 +401,7 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
             arr = table.column(name).combine_chunks()
             t0 = time.perf_counter()
             if (len(arr) == 1 and arr.null_count == 0
-                    and (pa.types.is_string(arr.type)
-                         or pa.types.is_binary(arr.type)
-                         or pa.types.is_large_string(arr.type)
-                         or pa.types.is_large_binary(arr.type))
+                    and _is_bytes_like(arr.type)
                     and arr.nbytes > stripe_bytes):
                 # multi-block cell: a single cell above the stripe cap is
                 # split across fragment blocks (the reference's cell-spans-
@@ -403,12 +416,8 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
                 # so SLICE them from the arrow buffer — as_py() here would
                 # materialize the whole multi-GiB cell as a python object a
                 # second time (encode_cell_fragments already paid that once)
-                cast_to = (pa.large_binary()
-                           if (pa.types.is_large_string(arr.type)
-                               or pa.types.is_large_binary(arr.type))
-                           else pa.binary())
                 head = pc.binary_slice(
-                    arr.cast(cast_to), 0, _ZONE_PREFIX + 1)[0].as_py()
+                    _as_binary(arr), 0, _ZONE_PREFIX + 1)[0].as_py()
                 total_len = arr.nbytes  # single cell: data bytes = cell len
                 # emulate full-string semantics: if the cell is longer than
                 # the prefix we sliced, pad logically by passing a >16-byte
@@ -439,19 +448,12 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
                 if pa.types.is_integer(arr.type):
                     mm = pc.min_max(arr)
                     vmin, vmax = mm["min"].as_py(), mm["max"].as_py()
-                elif (pa.types.is_string(arr.type) or pa.types.is_binary(arr.type)
-                      or pa.types.is_large_string(arr.type)
-                      or pa.types.is_large_binary(arr.type)):
-                    # byte-order min/max (matches Spark's UTF8String/binary
-                    # comparison), then parquet-style truncation.  large_*
-                    # types included to match the fragment branch's accepted
-                    # set — a large-typed whole block without smin would be
-                    # silently pruned by string zone filters (row loss).
-                    cast_to = (pa.large_binary()
-                               if (pa.types.is_large_string(arr.type)
-                                   or pa.types.is_large_binary(arr.type))
-                               else pa.binary())
-                    mm = pc.min_max(arr.cast(cast_to))
+                elif _is_bytes_like(arr.type):
+                    # byte-order min/max, then parquet-style truncation.
+                    # large_* types included: a large-typed whole block
+                    # without smin would be silently pruned by string zone
+                    # filters (row loss).
+                    mm = pc.min_max(_as_binary(arr))
                     smin, smax = _zone_str_bounds(mm["min"].as_py(),
                                                   mm["max"].as_py())
             rows_out.append((stripe, name, info["codec"], -1, len(arr),
@@ -469,7 +471,8 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
         schema=BLOCKS_SCHEMA)
     lineage_tbl = pa.Table.from_arrays(
         [pa.array([r[i] for r in lineage],
-                  type=LINEAGE_SCHEMA.field(i).type) for i in range(7)],
+                  type=LINEAGE_SCHEMA.field(i).type)
+         for i in range(len(LINEAGE_SCHEMA))],
         schema=LINEAGE_SCHEMA)
     # atomic publish: UNIQUE tmp + rename, marker last (crash before marker
     # → redo).  The tmp name is unique per task ATTEMPT: Spark can run
@@ -685,8 +688,9 @@ def _read_blocks(spark, warehouse: str):
     """The warehouse's blocks table, its schema taken from one bucket
     file's footer (what Spark's inference reads too, minus the one-task
     inference job it runs per call) plus the ``bucket`` partition column.
-    Warehouses written before multi-block cells have no ``frag`` column;
-    callers add it."""
+    Warehouses written before multi-block cells have no ``frag`` column:
+    every block there is a whole-column block, so ``frag`` reads as -1."""
+    from pyspark.sql import functions as F
     from pyspark.sql.pandas.types import from_arrow_schema
     from pyspark.sql.types import IntegerType
 
@@ -695,7 +699,10 @@ def _read_blocks(spark, warehouse: str):
     if not files:
         raise FileNotFoundError(f"no block files under {bdir}")
     schema = from_arrow_schema(pq.read_schema(files[0]))
-    return spark.read.schema(schema.add("bucket", IntegerType())).parquet(bdir)
+    bdf = spark.read.schema(schema.add("bucket", IntegerType())).parquet(bdir)
+    if "frag" not in bdf.columns:
+        bdf = bdf.withColumn("frag", F.lit(-1).cast("bigint"))
+    return bdf
 
 
 def decode_table(spark, warehouse: str, *,
@@ -758,11 +765,6 @@ def decode_table(spark, warehouse: str, *,
     arrow_schema = to_arrow_schema(_parse_datatype_string(out_schema))
 
     blocks_df = _read_blocks(spark, warehouse)
-    if "frag" not in blocks_df.columns:
-        # warehouses written before multi-block cells existed: every block
-        # is a whole-column block (back-compat, same stance as
-        # errors.validate_blocks)
-        blocks_df = blocks_df.withColumn("frag", F.lit(-1))
     zone_filters = ([] if zone_filter is None
                     else [zone_filter] if isinstance(zone_filter, tuple)
                     else list(zone_filter))
@@ -890,10 +892,8 @@ def decode_giant_cells(spark, warehouse: str, column: str, *,
     """
     from pyspark.sql import functions as F
 
-    bdf = _read_blocks(spark, warehouse)
-    if "frag" not in bdf.columns:  # pre-fragment warehouse: nothing to do
-        bdf = bdf.withColumn("frag", F.lit(-1))
-    bdf = bdf.filter((F.col("column") == column) & (F.col("frag") >= 0))
+    bdf = _read_blocks(spark, warehouse).filter(
+        (F.col("column") == column) & (F.col("frag") >= 0))
     if validate:
         bad = (bdf.groupBy("bucket", "stripe")
                .agg(F.count("*").alias("cnt"),
@@ -953,13 +953,13 @@ def verify_roundtrip(spark, source_df, plan: EncodePlan, warehouse: str) -> dict
     decoded = decode_table(spark, warehouse)
     src = plan.project(source_df).select(*plan.column_names)
 
-    def hashed(df, tag):
+    def hashed(df):
         exprs = [F.sha2(F.coalesce(F.col(c).cast("string"), F.lit("\x00NULL")), 256)
                  .alias(f"{c}__h") for c in plan.column_names
                  if c not in plan.key_cols]
         return df.select(*plan.key_cols, *exprs)
 
-    s, d = hashed(src, "s"), hashed(decoded, "d")
+    s, d = hashed(src), hashed(decoded)
     joined = s.alias("s").join(d.alias("d"), on=list(plan.key_cols), how="full")
     cmp_cols = [c for c in plan.column_names if c not in plan.key_cols]
     # all-key plans (every column part of row identity) have nothing beyond
@@ -969,7 +969,7 @@ def verify_roundtrip(spark, source_df, plan: EncodePlan, warehouse: str) -> dict
     for c in cmp_cols:
         cond = (F.col(f"s.{c}__h").isNull() | F.col(f"d.{c}__h").isNull()
                 | (F.col(f"s.{c}__h") != F.col(f"d.{c}__h")))
-        mismatch = cond if mismatch is None else (mismatch | cond)
+        mismatch = mismatch | cond
     # single pass: counts + mismatches in one aggregation so the decode
     # pipeline executes exactly once
     probe_s = f"s.{cmp_cols[0]}__h" if cmp_cols else plan.key_cols[0]

@@ -70,8 +70,7 @@ def validate_blocks(spark, warehouse: str, expected_cols: list | None = None):
 
         # fragment rows (frag >= 0) are one LOGICAL block per column: a
         # multi-block cell (blocks.encode_cell_fragments) is not a duplicate
-        frag_mask = pdf["frag"] >= 0 if "frag" in pdf.columns \
-            else pd.Series(False, index=pdf.index)
+        frag_mask = pdf["frag"] >= 0
         whole = pdf[~frag_mask]
         fragged = pdf[frag_mask]
         present = list(whole["column"]) + sorted(set(fragged["column"]))

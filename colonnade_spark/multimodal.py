@@ -29,6 +29,8 @@ from typing import Callable
 import numpy as np
 import pandas as pd
 
+from .session import partition_for_python
+
 _DECODERS: dict = {}
 
 N_FEATURES = 8
@@ -148,13 +150,9 @@ def extract_features(df, id_col: str, bin_col: str, modality: str = "fake",
             f"{sorted(_DECODERS)}; use 'fake' for the deterministic "
             "stand-in decoder")
 
-    from .textops import _spread
-
-    # _spread: a few-MB parquet scan is one split, which would serialize
-    # the whole feature kernel on a single task (round-6 finding: python
-    # stages starve because AQE/scan splitting only sees bytes)
-    src = _spread(df.select(F.col(id_col).cast("bigint").alias("id"),
-                            F.col(bin_col).alias("payload")))
+    src = partition_for_python(
+        df.select(F.col(id_col).cast("bigint").alias("id"),
+                  F.col(bin_col).alias("payload")))
 
     def run(batches):
         for pdf in batches:

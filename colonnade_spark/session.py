@@ -71,3 +71,42 @@ def get_spark(app: str = "colonnade_spark", cores: int | None = None,
         .config("spark.log.level", "WARN")
         .getOrCreate()
     )
+
+
+def partition_for_python(df, *keys):
+    """Give a Python stage (pandas/Arrow UDF, ``mapInArrow`` kernel) one
+    task per core: the engine's single partitioning policy for every
+    frame that feeds Python.
+
+    With ``keys``: ``df.repartition(n, *keys)`` with
+    ``n = defaultParallelism``, for the keyed pair/block kernels.  The
+    count must be explicit: a count-free ``repartition(*keys)`` lets AQE
+    coalesce the exchange by shuffle BYTES, and AQE cannot see Python
+    CPU, so a ~25 MB text exchange collapses to 1-2 tasks and serializes
+    the kernel (10.4 s vs 1.4 s on the ngram kernel at sf1.0).
+    Interleaved A/B at sf0.1 and on a 10x corpus: 1x defaultParallelism
+    beat 2x on every kernel query (each extra task wave costs ~5-15 ms of
+    Arrow/task overhead once the hash partitioning already balances the
+    buckets; embedding pairs 1.26 -> 1.01 s), and 1/2x was slower again
+    (kernel CPU under-parallelized).  Buckets skewed enough to leave
+    straggler tasks of seconds would favour 2-4x; this is the one place
+    to change.
+
+    Without keys: ``df.repartition(n)`` only when ``df`` has fewer than
+    ``n`` partitions, else ``df`` unchanged.  A small parquet file is one
+    split, which would run the whole stage on one task; at scale the scan
+    supplies the splits and no shuffle is added.  Call it on an
+    exchange-free frame (a scan plus narrow operators): the partition-count
+    probe then starts no Spark job.
+
+    Whether to call this at all stays the caller's decision: it pays only
+    where Python or heavy per-row JVM work (regex, JSON parsing) follows.
+    In front of a large-vocabulary aggregation it hurts: splitting
+    ``top_terms``'s one scan split 32 ways stops map-side combining and
+    took it 0.7 -> 7.7 s, so that query does not use it."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if keys:
+        return df.repartition(n, *keys)
+    if df.rdd.getNumPartitions() < n:
+        return df.repartition(n)
+    return df

@@ -31,6 +31,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd  # module-level: pandas_udf type-hint resolution needs it
 
+from .session import partition_for_python
+
 _DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0.0 as double),"
         " (s, v) -> s + v)")
 
@@ -363,13 +365,10 @@ def cosine_near_dup_pairs(spark, df, vec_col: str, id_col: str,
     pair instead of three; same float values, 3x less work."""
     from pyspark.sql import functions as F
 
-    from .textops import _spread
-
-    # _spread: a one-split scan otherwise serializes the signature UDF
-    # AND the per-pair cosine HOF folds on a single task (round-6
-    # parallelism finding; no-op when the scan already parallelizes)
-    v = _spread(df).select(F.col(id_col).alias("id"),
-                           F.expr(_dbl(vec_col)).alias("e"))
+    # spread serves the signature UDF AND the exact path's per-pair cosine
+    # HOF folds
+    v = partition_for_python(df).select(F.col(id_col).alias("id"),
+                                        F.expr(_dbl(vec_col)).alias("e"))
     v = v.withColumn("n2", F.expr(_DOT.format(a="e", b="e")))
     va = v.select(F.col("id").alias("id_a"), F.col("e").alias("ea"),
                   F.col("n2").alias("na"))
@@ -398,9 +397,7 @@ def cosine_near_dup_pairs(spark, df, vec_col: str, id_col: str,
         # only.  Same shape as the minhash/simhash kernels.
         ex = sig.select(F.col("id").cast("bigint").alias("id"), "e", "n2",
                         F.posexplode(bandcols).alias("band", "bh"))
-        from .textops import _kernel_partitions
-        n_part = _kernel_partitions(spark)
-        shuffled = (ex.repartition(n_part, "band", "bh")
+        shuffled = (partition_for_python(ex, "band", "bh")
                     .sortWithinPartitions("band", "bh", "id"))
         pairs = shuffled.mapInArrow(
             cosine_bucket_pair_kernel(threshold),

@@ -8,8 +8,8 @@ Siphon.hs:612-616).  The Spark-native generalization is file-source
 micro-batch*:
 
 * each micro-batch encodes into its own sub-warehouse
-  (``<warehouse>/batch=<id>``) through the full engine (salted staging,
-  per-bucket checkpoint markers, lineage);
+  (``<warehouse>/batch=<id>``) through the full engine (salted bucket
+  shuffle, per-bucket checkpoint markers, lineage);
 * Structured Streaming's checkpoint gives exactly-once batch ids — a
   crashed run replays only unfinished batches, and byte-determinism makes
   the replay idempotent (the engine-level analog of the reference's parser

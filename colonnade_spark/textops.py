@@ -27,6 +27,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd  # module-level: pandas_udf type-hint resolution needs it
 
+from .session import partition_for_python
+
 _M64 = (1 << 64) - 1
 
 
@@ -207,42 +209,6 @@ def _materialize(df, path: str | None = None):
     return spark.read.parquet(path)
 
 
-def _kernel_partitions(spark) -> int:
-    """Explicit partition count for keyed exchanges that feed python
-    kernels (mapInArrow pair kernels, the ngram block kernel).  The count
-    MUST be explicit — AQE coalesces these exchanges by shuffle BYTES and
-    cannot see python-side CPU, collapsing a ~25 MB exchange to 1-2 tasks
-    (round-6 structural finding; measured 10.4 s vs 1.4 s on the ngram
-    kernel).
-
-    Default multiplier 1 × defaultParallelism: same-session interleaved
-    A/B at sf0.1 AND on a 10× corpus read 1× faster than 2× on every
-    kernel query (each extra task wave costs ~5-15 ms of arrow/task
-    overhead while the per-bucket work is already balanced by the hash
-    partitioning; e.g. embedding pairs 1.26 → 1.01 s, and 16 (= ½×) was
-    worse again — the kernel CPU then under-parallelizes).  On clusters
-    where per-bucket pair volume is heavily skewed (task runtimes of
-    seconds+, stragglers visible), set SPARK_GRAFT_KERNEL_PART_MULT=2..4:
-    finer tasks let the scheduler balance the tail, and the per-task fixed
-    cost is amortized by then.  Scale-adaptive either way — the count is
-    derived from the cluster's parallelism, never a tuned constant."""
-    import os
-
-    mult = max(int(os.environ.get("SPARK_GRAFT_KERNEL_PART_MULT", "1")), 1)
-    return spark.sparkContext.defaultParallelism * mult
-
-
-def _spread(df):
-    """Ensure the signature UDF gets enough tasks to use the cluster: a
-    single small parquet file otherwise serializes the whole kernel in one
-    task.  No-op when the input already has enough partitions (at scale the
-    scan supplies them — no extra shuffle)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
 def with_minhash(df, text_col: str, sig_col: str = "sig",
                  n_hashes: int = 64, shingle: int = 5):
     from pyspark.sql import functions as F
@@ -252,7 +218,8 @@ def with_minhash(df, text_col: str, sig_col: str = "sig",
     def sig_udf(s: pd.Series) -> pd.Series:
         return pd.Series(minhash_signature_batch(s.tolist(), n_hashes, shingle))
 
-    return _spread(df).withColumn(sig_col, sig_udf(F.col(text_col)))
+    return partition_for_python(df).withColumn(sig_col,
+                                               sig_udf(F.col(text_col)))
 
 
 def minhash_near_dup_pairs(spark, df, id_col: str, text_col: str,
@@ -309,12 +276,7 @@ def minhash_near_dup_pairs(spark, df, id_col: str, text_col: str,
     # same matches/n_hashes double, so the surviving pair set is identical.
     exploded = sigged.select(F.col(id_col).cast("bigint").alias("id"), "sig",
                              F.posexplode(band_arr).alias("band", "bh"))
-    # explicit partition count: AQE would coalesce this exchange by BYTES
-    # and serialize the python pair kernel on a handful of tasks (it
-    # cannot see python-side CPU, guide §4); count policy + skew knob in
-    # _kernel_partitions
-    n_part = _kernel_partitions(sigged.sparkSession)
-    shuffled = (exploded.repartition(n_part, "band", "bh")
+    shuffled = (partition_for_python(exploded, "band", "bh")
                 .sortWithinPartitions("band", "bh", "id"))
     pairs = shuffled.mapInArrow(
         minhash_bucket_pair_kernel(n_hashes, threshold, max_bucket),
@@ -360,7 +322,8 @@ def with_simhash(df, text_col: str, sig_col: str = "simhash", shingle: int = 4):
     def sim_udf(s: pd.Series) -> pd.Series:
         return pd.Series(simhash_batch(s.tolist(), shingle))
 
-    return _spread(df).withColumn(sig_col, sim_udf(F.col(text_col)))
+    return partition_for_python(df).withColumn(sig_col,
+                                               sim_udf(F.col(text_col)))
 
 
 def simhash_pairs_from_sigs(df_sigged, id_col: str, sig_col: str = "simhash",
@@ -413,12 +376,7 @@ def simhash_pairs_from_sigs(df_sigged, id_col: str, sig_col: str = "simhash",
     # their (band, bh) keys as sentinel rows (hamming = -1), which replaces
     # the former bucket-size groupBy — a SECOND full explode+shuffle+agg
     # pass over the signature table at any scale — as the Manku router.
-    # explicit partition count — same AQE-coalescing hazard as the minhash
-    # kernel (a ~13 MB exploded signature table would collapse to ONE
-    # post-shuffle partition and serialize the 65M-pair popcount); count
-    # policy + skew knob in _kernel_partitions
-    n_part = _kernel_partitions(df_sigged.sparkSession)
-    shuffled = (exploded.repartition(n_part, "band", "bh")
+    shuffled = (partition_for_python(exploded, "band", "bh")
                 .sortWithinPartitions("band", "bh", "id"))
     # localCheckpoint: level0 feeds BOTH the result union and the Manku
     # routing broadcast; without a materialization barrier the broadcast
@@ -462,7 +420,7 @@ def simhash_pairs_from_sigs(df_sigged, id_col: str, sig_col: str = "simhash",
                .select("id", "sig", "band", "bh",
                        F.posexplode(chunks2).alias("band2", "bh2"))
                .filter(F.col("band2") != F.col("band")))
-    level1 = (refined.repartition(n_part, "band", "bh", "band2", "bh2")
+    level1 = (partition_for_python(refined, "band", "bh", "band2", "bh2")
               .sortWithinPartitions("band", "bh", "band2", "bh2", "id")
               .mapInArrow(
                   simhash_bucket_pair_kernel(["band", "bh", "band2", "bh2"],
@@ -800,7 +758,7 @@ def with_winnow_fingerprints(df, text_col: str, fp_col: str = "fps",
     def fp_udf(s: pd.Series) -> pd.Series:
         return pd.Series(winnow_batch(s.tolist(), shingle, window))
 
-    return _spread(df).withColumn(fp_col, fp_udf(F.col(text_col)))
+    return partition_for_python(df).withColumn(fp_col, fp_udf(F.col(text_col)))
 
 
 # --------------------------------------------------------------------------
@@ -1388,9 +1346,8 @@ def _word_span_hashes(texts, k: int):
 def with_word_shingle_hashes(df, text_col: str, out_col: str = "sh",
                              k: int = 3):
     """array<bigint> column of distinct word-k-gram hashes (vectorized
-    pandas UDF over :func:`word_shingle_hash_sets`).  Input is _spread
-    first: a few-MB parquet scan yields one split, which would serialize
-    the kernel on one task (no-op when the scan already parallelizes)."""
+    pandas UDF over :func:`word_shingle_hash_sets`), on input spread by
+    :func:`~colonnade_spark.session.partition_for_python`."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import ArrayType, LongType
 
@@ -1398,7 +1355,8 @@ def with_word_shingle_hashes(df, text_col: str, out_col: str = "sh",
     def sh_udf(s: pd.Series) -> pd.Series:
         return pd.Series(word_shingle_hash_sets(s.tolist(), k))
 
-    return _spread(df).withColumn(out_col, sh_udf(F.col(text_col)))
+    return partition_for_python(df).withColumn(out_col,
+                                               sh_udf(F.col(text_col)))
 
 
 # --------------------------------------------------------------------------

@@ -474,9 +474,11 @@ def test_multi_zone_filter_conjunction(spark, tmp_path):
 
 def test_decode_pre_fragment_warehouse_backcompat(spark, tmp_path):
     """Review regression: warehouses written before the multi-block-cell
-    change have no 'frag' column — decode must still read them (every
-    block is a whole-column block)."""
+    change have no 'frag' column — decode, validation and the giant-cell
+    reader must still read them (every block is a whole-column block)."""
     import pyarrow.parquet as pq
+
+    from colonnade_spark.errors import validate_blocks
 
     rows = [("r", f"p{i}", f"c{i}", "py", f"small body {i} " * 10)
             for i in range(300)]
@@ -491,6 +493,9 @@ def test_decode_pre_fragment_warehouse_backcompat(spark, tmp_path):
         pq.write_table(t.drop_columns(["frag"]), fp, compression="NONE")
     got = {tuple(r) for r in engine.decode_table(spark, wh).collect()}
     assert got == set(rows) and len(got) == 300
+    assert validate_blocks(spark, wh).count() == 0
+    assert engine.decode_giant_cells(spark, wh, "content").count() == 0
+
 
 def test_engine_end_to_end_array_column(spark, tmp_path):
     """FULL engine path for an array<float> column (not just the blocks

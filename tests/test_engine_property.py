@@ -1,5 +1,5 @@
 """Engine-level round-trip property: arbitrary small mixed-type tables
-through the FULL pipeline (staging → bucket encode → arrow decode) must come
+through the FULL pipeline (bucket shuffle → encode → arrow decode) must come
 back exactly — the end-to-end generalization of the codec-level propIso
 suite (and the net that catches boundary-layer bugs like the round-1
 nullable-int64 float64 corruption, which every codec test missed because it

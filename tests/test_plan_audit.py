@@ -4,6 +4,8 @@ parquet scan, columns pruned before the Python boundary, small sides
 broadcast, aggregations partial+final, and no cartesian products anywhere
 in the query surface."""
 
+import re
+
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -64,9 +66,11 @@ def test_no_cartesian_anywhere_in_query_surface(spark):
         assert "CartesianProduct" not in plan, f"{name}: {plan[:2000]}"
 
 
-def test_encode_staging_plan_shape(spark):
-    """The staging plan: salt-map join is broadcast (tiny per-repo sizes
-    table), the repartition is a single hash exchange on __bucket."""
+def test_encode_plan_shape(spark):
+    """The encode plan as ``encode_table`` builds it: the salt-map join is
+    broadcast (tiny per-repo sizes table), and buckets are placed by id
+    with an explicit count (``repartitionById``), an exchange AQE cannot
+    coalesce, so each bucket keeps its own encode task."""
     from colonnade_spark import engine
     from colonnade_spark.plan import corpus_plan
     from pyspark.sql import functions as F
@@ -78,12 +82,75 @@ def test_encode_staging_plan_shape(spark):
                              "text as content")
     plan_obj = corpus_plan()
     bucketed = engine.assign_buckets(plan_obj.project(corpus), plan_obj, 8)
-    staged = (bucketed.repartition(8, F.col("__bucket"))
-              .sortWithinPartitions(*plan_obj.stage_order))
-    plan = _plan(staged)
+    shuffled = (bucketed.repartitionById(8, F.col("__bucket"))
+                .sortWithinPartitions("__bucket", *plan_obj.stage_order))
+    plan = _plan(shuffled)
+    assert re.search(r"Exchange shufflepartitionidpassthrough\("
+                     r"direct_shuffle_partition_id\(__bucket#\d+\), 8\), "
+                     r"REPARTITION_BY_NUM", plan), plan
     assert "BroadcastHashJoin" in plan, plan          # salt map broadcast
     assert plan.count("Exchange") <= 3, plan           # agg + repartition
     assert "CartesianProduct" not in plan, plan
+
+
+# Python operators as they appear in a physical plan, and the nodes allowed
+# between one of them and the exchange that feeds it
+_PYTHON_OPS = {"MapInArrow", "ArrowEvalPython", "MapInPandas"}
+_PASS_THROUGH = {"Sort", "Project"}
+
+
+def _children(node):
+    """Physical children of a py4j plan node, subquery plans included and
+    the adaptive wrapper unwrapped to the plan it will run."""
+    if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    out = []
+    for seq in (node.children(), node.subqueries()):
+        out.extend(seq.apply(i) for i in range(seq.size()))
+    return out
+
+
+def _python_feeding_exchanges(node):
+    """Yield ``(python_op, exchange)`` for every shuffle exchange directly
+    under a Python operator, with only Sort/Project nodes between them."""
+    if node.nodeName() in _PYTHON_OPS:
+        below = _children(node)
+        while len(below) == 1 and below[0].nodeName() in _PASS_THROUGH:
+            below = _children(below[0])
+        for c in below:
+            if c.nodeName() == "Exchange":
+                yield node.nodeName(), c
+    for c in _children(node):
+        yield from _python_feeding_exchanges(c)
+
+
+def test_python_stages_get_explicit_partition_counts(spark):
+    """Every exchange that directly feeds a Python operator carries an
+    explicit partition count (``REPARTITION_BY_NUM``).  A count-free
+    exchange is coalesced by AQE on shuffle BYTES, which cannot see Python
+    CPU, and serializes the kernel on 1-2 tasks (see
+    ``session.partition_for_python``).
+
+    Audited: every registry query at sf0.001 whose plan is built lazily.
+    Not audited: ``dedup_near_cluster`` and ``simhash_neardup`` run jobs
+    while planning and return checkpointed/cached frames, so their Python
+    stages are not in the returned plan."""
+    from colonnade_spark.queries import registry
+
+    eager = {"dedup_near_cluster", "simhash_neardup"}
+    fed = set()
+    for name, (fn, _sql) in registry().items():
+        if name in eager:
+            continue
+        root = fn(spark, SF)._jdf.queryExecution().executedPlan()
+        for op, ex in _python_feeding_exchanges(root):
+            origin = ex.shuffleOrigin().toString()
+            assert origin == "REPARTITION_BY_NUM", (
+                f"{name}: {op} fed by {origin} exchange\n{ex.toString()}")
+            fed.add(name)
+    # the audit reached both the keyless spread and the keyed kernels
+    assert {"doc_winnow", "minhash_neardup", "ngram_jaccard",
+            "embedding_neardup_lsh"} <= fed, sorted(fed)
 
 
 def test_chunking_and_mix_sample_are_shuffle_free(spark):
